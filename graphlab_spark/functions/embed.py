@@ -59,17 +59,22 @@ def embed_udf(surfaces: pd.Series) -> pd.Series:
     return surfaces.map(lambda s: embed_surface(s).tolist())
 
 
-def cosine_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched cosine kernel shared by the Spark UDF and the driver-side
-    vocabulary fast path — ONE implementation so both produce bit-identical
-    scores (row-independent einsum: batch boundaries don't change values).
-    """
-    ma = np.stack(a.map(lambda v: np.asarray(v, dtype=np.float32)).to_numpy())
-    mb = np.stack(b.map(lambda v: np.asarray(v, dtype=np.float32)).to_numpy())
+def cosine_rows(ma: np.ndarray, mb: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two float32 matrices — the ONE scoring kernel
+    shared by the Spark UDF (:func:`cosine_batch`) and the driver-side
+    vocabulary fast path, so both produce bit-identical scores
+    (row-independent einsum: batch boundaries don't change values)."""
     na = np.linalg.norm(ma, axis=1)
     nb = np.linalg.norm(mb, axis=1)
     denom = np.where((na == 0) | (nb == 0), 1.0, na * nb)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb) / denom)
+    return np.einsum("ij,ij->i", ma, mb) / denom
+
+
+def cosine_batch(a: pd.Series, b: pd.Series) -> pd.Series:
+    """:func:`cosine_rows` over two Series of vectors (rows already paired)."""
+    ma = np.stack(a.map(lambda v: np.asarray(v, dtype=np.float32)).to_numpy())
+    mb = np.stack(b.map(lambda v: np.asarray(v, dtype=np.float32)).to_numpy())
+    return pd.Series(cosine_rows(ma, mb))
 
 
 @F.pandas_udf(T.DoubleType())

@@ -36,8 +36,11 @@ _RE_BLOCK = re.compile(
     rb"section|article|blockquote|pre|title|head|body|html)\b[^>]*>"
 )
 _RE_TAG = re.compile(rb"<[^>]+>")
-_RE_SPACES = re.compile(r"[ \t\r\f\v]+")
-_RE_BLANKS = re.compile(r"\n{2,}")
+# _RE_SPACES skips lone spaces (replacing one with itself is a no-op);
+# _RE_BLANKS starts with a literal "\n\n", which the engine scans for
+# directly instead of trying a repeat at every position.
+_RE_SPACES = re.compile(r"[\t\r\f\v][ \t\r\f\v]*| [ \t\r\f\v]+")
+_RE_BLANKS = re.compile(r"\n\n+")
 
 
 def extract_text_bytes(html_bytes: bytes | None) -> str | None:

@@ -29,6 +29,7 @@ import os
 from collections import Counter
 from hashlib import blake2b
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,8 +37,8 @@ from pyspark.sql import types as T
 
 from graphlab_spark.functions.embed import (
     char_ngrams,
-    cosine_batch,
     cosine_pairs_udf,
+    cosine_rows,
     embed_surface,
     embed_udf,
 )
@@ -186,7 +187,7 @@ def link_surfaces_small(
     """Driver-side replica of :func:`link_surfaces` for vocabularies that
     fit on the driver (the adaptive fast path — size-switched by the
     pipeline; the distributed path is the 100 TB default). Same block
-    keys, same exact-hit rule, same :func:`cosine_batch` kernel → output
+    keys, same exact-hit rule, same :func:`cosine_rows` kernel → output
     rows identical to the distributed path (pinned by a test).
     """
     ablocks_rows, token_df = alias_block_rows(alias_rows)
@@ -226,23 +227,17 @@ def link_surfaces_small(
             f"budget {FASTPATH_MAX_CANDIDATES}; use the distributed path"
         )
 
-    # ONE vectorized cosine batch over every fuzzy candidate pair
-    # (einsum is row-independent, so global batching is bit-identical to
-    # the per-pair computation the Spark UDF performs)
-    emb_cache: dict[str, list[float]] = {}
-
-    def _emb(key: str) -> list[float]:
-        v = emb_cache.get(key)
-        if v is None:
-            v = embed_surface(key).tolist()
-            emb_cache[key] = v
-        return v
-
+    # ONE vectorized cosine batch over every fuzzy candidate pair: each
+    # distinct key is embedded once and the pair rows are gathered by
+    # index (einsum is row-independent, so global batching is
+    # bit-identical to the per-pair computation the Spark UDF performs)
     fuzzy_scores: list[float] = []
     if fuzzy_pairs:
-        sv = pd.Series([_emb(sk) for _, sk, _ in fuzzy_pairs])
-        av = pd.Series([_emb(c["akey"]) for _, _, c in fuzzy_pairs])
-        fuzzy_scores = [float(s) for s in cosine_batch(sv, av)]
+        row_of: dict[str, int] = {}
+        ia = [row_of.setdefault(sk, len(row_of)) for _, sk, _ in fuzzy_pairs]
+        ib = [row_of.setdefault(c["akey"], len(row_of)) for _, _, c in fuzzy_pairs]
+        emb = np.stack([embed_surface(k) for k in row_of])
+        fuzzy_scores = cosine_rows(emb[ia], emb[ib]).tolist()
     score_of: dict[tuple[str, str, str], float] = {
         (s, c["akey"], c["canonical_id"]): sc
         for (s, _, c), sc in zip(fuzzy_pairs, fuzzy_scores)

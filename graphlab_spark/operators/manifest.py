@@ -164,10 +164,13 @@ class Manifest:
         run_id: str,
         stage: str,
         stats: DataFrame,
+        started_at: _dt.datetime,
         attempt: int = 1,
     ) -> None:
         """Append completed rows.
         ``stats``: (partition_id, rows_in, input_fp, rows_out).
+        ``started_at``: when the stage began; ``finished_at`` is the time
+        of this call.
 
         Timestamps are wall-clock bookkeeping only — they never influence
         data content (determinism is over data, not over audit columns).
@@ -186,7 +189,7 @@ class Manifest:
                 F.col("rows_out").cast("long"),
                 F.create_map(F.lit("rows_out"), F.col("rows_out").cast("long")).alias("counters"),
                 F.lit(attempt).alias("attempt"),
-                F.lit(now).alias("started_at"),
+                F.lit(started_at).alias("started_at"),
                 F.lit(now).alias("finished_at"),
             )
         )

@@ -4,7 +4,7 @@ extract (html→text), mention detection, and triple extraction are all
 pure per-document functions — running them as three separate pandas-UDF
 stages costs three Python round-trips over the (large) text payload plus
 two extra stage materializations. This operator fuses them into one
-``mapInPandas``: html goes to the Python worker once, text is produced
+``mapInArrow``: html goes to the Python worker once, text is produced
 and immediately consumed in-process, and the output row carries the text
 plus BOTH result arrays (exploded JVM-side by the consumers).
 

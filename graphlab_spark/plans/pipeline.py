@@ -11,7 +11,7 @@ re-expressed as Spark stages over a Common-Crawl-style corpus.
 
 Scale design:
 - Per-document work (parse) is the 100 TB cost centre → fused into ONE
-  vectorized pandas pass (operators/parse.py), embarrassingly parallel.
+  mapInArrow pass (operators/parse.py), embarrassingly parallel.
 - Vocabulary-level work (linking, canonicalization) is size-ADAPTIVE:
   distinct surfaces are Zipf-bounded (~10^8 at 10^12 docs); when the
   vocabulary fits on the driver it is computed there in one job
@@ -34,6 +34,7 @@ nothing and reproduce identical output.
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 from typing import Callable
 
@@ -98,6 +99,7 @@ def run_stage(
     mod 2^61-1 — so the fingerprint is stable across partitioning and
     row order but changes when any fingerprinted value changes.
     """
+    started_at = _dt.datetime.now(_dt.timezone.utc)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     fp_cols = fp_cols or [key_col]
     keyed = input_df.withColumn("partition_id", bucket_of(key_col))
@@ -170,6 +172,7 @@ def run_stage(
                 [(pid, 0, -1, 0) for _, pid in stale],
                 "partition_id int, rows_in long, input_fp long, rows_out long",
             ),
+            started_at=started_at,
         )
         for name, _ in stale:
             fs.delete(f"{out_path}/{name}")
@@ -217,6 +220,7 @@ def run_stage(
         manifest.record_completed(
             run_id, stage,
             in_stats.withColumn("rows_out", F.lit(0).cast("long")),
+            started_at=started_at,
         )
         return spark.createDataFrame([], out_df.schema)
 
@@ -232,7 +236,7 @@ def run_stage(
         .join(out_stats, "partition_id", "left")
         .fillna(0, ["rows_out"])
     )
-    manifest.record_completed(run_id, stage, stats)
+    manifest.record_completed(run_id, stage, stats, started_at=started_at)
     return spark.read.parquet(out_path).drop("partition_id")
 
 
@@ -255,6 +259,7 @@ def run_global_stage(
     never return stale vocabulary/graph output. The done-probe reads the
     driver-side manifest snapshot (one collect per pipeline run, not one
     count-job per stage — r4, judge item)."""
+    started_at = _dt.datetime.now(_dt.timezone.utc)
     done_fp = manifest.latest_completed_fp(run_id, stage)
     done = done_fp is not manifest._MISSING and (
         input_fp is None or done_fp == input_fp
@@ -268,7 +273,7 @@ def run_global_stage(
         [(0, n, input_fp if input_fp is not None else 0, n)],
         "partition_id int, rows_in long, input_fp long, rows_out long",
     )
-    manifest.record_completed(run_id, stage, stats)
+    manifest.record_completed(run_id, stage, stats, started_at=started_at)
     return spark.read.parquet(out_path)
 
 

@@ -2,8 +2,14 @@
 
 from __future__ import annotations
 
-import pandas as pd
+import re
+from unittest import mock
 
+import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from graphlab_spark.operators import extract
 from graphlab_spark.operators.extract import extract_text_bytes
 from graphlab_spark.sources import corpus
 
@@ -47,3 +53,32 @@ def test_byte_identity_vs_golden(repo_root):
     assert len(live) == len(golden)
     for row in golden.itertuples():
         assert live[row.url].encode("utf-8") == row.text.encode("utf-8"), row.url
+
+
+# ---------------------- whitespace regexes == the plain run-collapsing form
+
+_OLD_SPACES = re.compile(r"[ \t\r\f\v]+")
+_OLD_BLANKS = re.compile(r"\n{2,}")
+_WS_PIECES = [" ", "\t", "\r", "\f", "\v", "\n", "\xa0", "&nbsp;", "a", "Acme", "."]
+_HTML_PIECES = _WS_PIECES + [
+    "<p>", "</P>", "<DiV class=x>", "<pre x>", "</pre >", "<h7>", "<H1>",
+    "<b>", "</b>", "<Br/>", "<script>s</script>", "<!-- c -->", "&amp;",
+]
+
+
+@settings(max_examples=1000, deadline=None)
+@given(st.lists(st.sampled_from(_WS_PIECES), max_size=30).map("".join))
+def test_whitespace_regexes_equal_plain_form(s):
+    assert extract._RE_SPACES.sub(" ", s) == _OLD_SPACES.sub(" ", s)
+    assert extract._RE_BLANKS.sub("\n", s) == _OLD_BLANKS.sub("\n", s)
+
+
+@settings(max_examples=1000, deadline=None)
+@given(st.lists(st.sampled_from(_HTML_PIECES), max_size=30).map("".join))
+def test_extract_equals_plain_whitespace_form(html):
+    b = html.encode("utf-8")
+    with mock.patch.object(extract, "_RE_SPACES", _OLD_SPACES), mock.patch.object(
+        extract, "_RE_BLANKS", _OLD_BLANKS
+    ):
+        want = extract_text_bytes(b)
+    assert extract_text_bytes(b) == want

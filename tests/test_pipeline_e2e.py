@@ -68,6 +68,15 @@ def test_nodes_have_no_unk_survivors_for_planted_entities(result):
             assert a.lower() not in gaz_surfaces, f"planted surface leaked to unk node: {a}"
 
 
+def test_manifest_rows_span_their_stage(spark, out_dir, result):
+    """A cold run's manifest rows carry the stage's real start time, not
+    a zero-length span at the moment the rows were written."""
+    rows = Manifest(spark, f"{out_dir}/manifest").read().collect()
+    assert {r.stage for r in rows} >= {"extract", "mentions", "triples", "edges"}
+    for r in rows:
+        assert r.started_at < r.finished_at, (r.stage, r.partition_id)
+
+
 def test_resume_skips_completed_and_is_idempotent(spark, out_dir, result):
     before = {k: result[k].orderBy(result[k].columns).collect() for k in ["nodes", "edges"]}
     manifest = Manifest(spark, f"{out_dir}/manifest")
