@@ -325,18 +325,6 @@ def _simhash_from_u64(hv: np.ndarray) -> int:
 
 
 @F.pandas_udf(T.LongType())
-def simhash_udf(shingles: pd.Series) -> pd.Series:
-    """64-bit simhash over shingle hashes, vectorized per Arrow batch."""
-    out = np.zeros(len(shingles), dtype=np.int64)
-    for i, sh in enumerate(shingles):
-        if sh is None or len(sh) == 0:
-            continue
-        hv = np.array([hash_shingle(s) for s in sh], dtype=np.uint64)
-        out[i] = _simhash_from_u64(hv)
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.LongType())
 def simhash_hashes_udf(hashes: pd.Series) -> pd.Series:
     """Simhash from PRE-HASHED shingles (JVM xxhash64) — numpy only."""
     out = np.zeros(len(hashes), dtype=np.int64)

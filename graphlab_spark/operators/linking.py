@@ -268,21 +268,3 @@ def link_surfaces_small(
                 }
             )
     return out
-
-
-def linking_stage(
-    spark: SparkSession,
-    mentions: DataFrame,
-    aliases: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-) -> DataFrame:
-    """mentions + alias dict → linked mentions (adds canonical_id/score/method;
-    unlinked mentions keep canonical_id = NULL for canonicalization)."""
-    surfaces = mentions.select("surface").distinct()
-    links = link_surfaces(spark, surfaces, aliases, threshold)
-    # links is vocabulary-sized (~10^8 distinct surfaces at 100 TB) — no
-    # explicit broadcast: AQE broadcasts only while it actually fits and
-    # splits skewed hot surfaces otherwise (VERDICT r1 item 1).
-    return mentions.join(
-        links.withColumnRenamed("score", "link_score"), "surface", "left"
-    )

@@ -55,6 +55,18 @@ def bucket_of(key_col: str, n_buckets: int = N_BUCKETS):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
+def fingerprint(items) -> int:
+    """Order-independent 61-bit fingerprint of ``items`` (their reprs,
+    sorted, blake2b) — non-negative, so never the tombstone ``-1``."""
+    from hashlib import blake2b
+
+    h = blake2b(digest_size=8)
+    for line in sorted(repr(i) for i in items):
+        h.update(line.encode("utf-8"))
+        h.update(b"\n")
+    return int.from_bytes(h.digest(), "big") % ((1 << 61) - 1)
+
+
 class Manifest:
     """Lineage ledger over a parquet path (Iceberg table in production)."""
 
@@ -114,21 +126,14 @@ class Manifest:
         fingerprint changes whenever upstream output may have changed
         (including change-then-revert, which appends twice). Driver-side:
         the manifest is tiny by construction."""
-        from hashlib import blake2b
-
         stage_set = set(stages)
-        rows = [
+        return fingerprint(
             (r["stage"], r["partition_id"], r["input_fp"], r["rows_in"], r["rows_out"])
             for r in self._rows()
             if r["run_id"] == run_id
             and r["stage"] in stage_set
             and r["status"] == "completed"
-        ]
-        h = blake2b(digest_size=8)
-        for r in sorted(str(row) for row in rows):
-            h.update(r.encode("utf-8"))
-            h.update(b"\n")
-        return int.from_bytes(h.digest(), "big") % ((1 << 61) - 1)
+        )
 
     _MISSING = object()
 

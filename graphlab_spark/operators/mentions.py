@@ -323,6 +323,8 @@ def mentions_stage(
     """docs(url, text, ...) → mentions(url, surface, start, end, m_type, conf).
 
     ``alias_map``: norm_key(alias) -> (canonical_id, entity_type); broadcast.
+    The pipeline runs the fused ``parse.parse_stage``; this unfused stage
+    is its test oracle.
     """
     bc = spark.sparkContext.broadcast(alias_map)
 

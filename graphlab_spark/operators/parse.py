@@ -142,3 +142,23 @@ def triples_view(parsed: DataFrame) -> DataFrame:
         F.col("t.conf").alias("conf"),
         F.col("t.sent_no").alias("sent_no"),
     )
+
+
+def surfaces_view(parsed: DataFrame) -> DataFrame:
+    """Distinct surfaces of the fused parse output (mention surfaces plus
+    triple subjects and objects) — one scan, JVM-side only.
+
+    The per-doc surface arrays are concatenated and exploded once rather
+    than unioning three re-reads of the table (r6; 0.8 s → ~0.3 s at 20k
+    pages). Consumers are order-independent (the sorted driver fast path,
+    the set-level distributed path), so only the distinct SET matters.
+    """
+    return parsed.select(
+        F.explode(
+            F.concat(
+                F.transform("mentions", lambda m: m["surface"]),
+                F.transform("triples", lambda t: t["subj"]),
+                F.transform("triples", lambda t: t["obj"]),
+            )
+        ).alias("surface")
+    ).distinct()

@@ -9,9 +9,15 @@ paper_process → entity_extract → vector_embed → kg_upsert``
 (``backend/app/models/processing_job.py:17``; ``backend/README.md:95-108``)
 re-expressed as Spark stages over a Common-Crawl-style corpus.
 
+One stage graph (:func:`run_pipeline`) serves both flavours: with an
+``out_dir`` every stage is a manifest-resumed resume point (C12); with
+``out_dir=None`` (:func:`run_pipeline_in_memory`, the query/benchmark
+flavour) stage results are pinned to scratch instead.
+
 Scale design:
 - Per-document work (parse) is the 100 TB cost centre → fused into ONE
-  mapInArrow pass (operators/parse.py), embarrassingly parallel.
+  mapInArrow pass (operators/parse.py), embarrassingly parallel; the
+  mention/triple/surface tables are JVM views of its output.
 - Vocabulary-level work (linking, canonicalization) is size-ADAPTIVE:
   distinct surfaces are Zipf-bounded (~10^8 at 10^12 docs); when the
   vocabulary fits on the driver it is computed there in one job
@@ -23,13 +29,17 @@ Scale design:
   surfaces otherwise. Broadcast is reserved for the alias dictionary
   (north_star C11), which is guarded by a hard row-count ceiling.
 
-Resume contract: every url-keyed stage writes output parquet partitioned
-by a STABLE hash bucket of the url (not the physical partition id — so a
-run can resume at a different executor count) under dynamic partition
-overwrite, then appends `completed` manifest rows per bucket keyed by an
-input fingerprint. A rerun anti-joins completed buckets away and
-recomputes only the remainder; reruns of a finished pipeline touch
-nothing and reproduce identical output.
+Resume contract: the url-keyed parse stage writes output parquet
+partitioned by a STABLE hash bucket of the url (not the physical
+partition id — so a run can resume at a different executor count) under
+dynamic partition overwrite, then appends `completed` manifest rows per
+bucket keyed by an input fingerprint of (url, warc_ts, alias
+dictionary). The vocabulary and graph stages are keyed on the upstream
+manifest rows plus the linking/canonicalization thresholds. A rerun
+anti-joins completed buckets away and recomputes only the remainder;
+reruns of a finished pipeline touch nothing and reproduce identical
+output. An ``out_dir`` written by an older stage layout holds no
+``parsed`` table, so every bucket recomputes.
 """
 
 from __future__ import annotations
@@ -44,12 +54,15 @@ from pyspark.sql import functions as F
 from graphlab_spark.operators import canonicalize as _canon
 from graphlab_spark.operators import linking as _linking
 from graphlab_spark.operators import materialize as _mat
-from graphlab_spark.operators.extract import extract_stage
-from graphlab_spark.operators.manifest import Manifest, bucket_of
-from graphlab_spark.operators.mentions import _norm_key, build_alias_map, mentions_stage
-from graphlab_spark.operators.parse import mentions_view, parse_stage, triples_view
+from graphlab_spark.operators.manifest import Manifest, bucket_of, fingerprint
+from graphlab_spark.operators.mentions import _norm_key, build_alias_map
+from graphlab_spark.operators.parse import (
+    mentions_view,
+    parse_stage,
+    surfaces_view,
+    triples_view,
+)
 from graphlab_spark.operators.scratch import materialize as _pin
-from graphlab_spark.operators.triples import triples_stage
 from graphlab_spark.functions.slug import slugify, slugify_udf
 from graphlab_spark.operators.linking import norm_key_udf
 
@@ -199,9 +212,12 @@ def run_stage(
         # only; on drift (rare) rebuild over the FULL input; the kept
         # old-schema partitions are replaced by the full rewrite itself
         # and any zero-output leftovers by the post-write deletion.
+        # Compared without nullability (simpleString): a parquet read
+        # marks every field nullable, so the nested non-null structs of
+        # the fused parse would otherwise read as drift on every resume.
         existing = spark.read.parquet(out_path).drop("partition_id").schema
-        if [(f.name, f.dataType) for f in existing] != [
-            (f.name, f.dataType) for f in out_df.schema
+        if [(f.name, f.dataType.simpleString()) for f in existing] != [
+            (f.name, f.dataType.simpleString()) for f in out_df.schema
         ]:
             keep = []
             pending = keyed
@@ -432,7 +448,15 @@ def _build_outputs(
 ) -> tuple[DataFrame, DataFrame]:
     """nodes/edges from canonical entity_map. entity_map is vocabulary-sized
     (or a local relation on the driver fast path) — join strategy left to
-    AQE/Catalyst, never a forced broadcast."""
+    AQE/Catalyst, never a forced broadcast.
+
+    Batch runs build straight from the mention/triple rows
+    (``build_nodes``/``build_edges``), not through the surface-keyed
+    stats form (``nodes_from_stats``/``edges_from_stats``): on 10,000
+    heavy pages the stats form made kg_build's timed ``edges.count()``
+    1.36 s → 1.65 s (median of 8 alternated passes, equal output). The
+    stats form stays only in cumulative streaming ingest, which needs
+    stats that combine across increments."""
     linked_mentions = mentions.join(entity_map, "surface").select(
         F.col("entity_id").alias("canonical_id"), "surface", "m_type"
     )
@@ -447,22 +471,51 @@ def _build_outputs(
     return nodes, edges
 
 
-def run_pipeline_in_memory(
+def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     aliases: DataFrame,
+    out_dir: str | None = None,
+    run_id: str = "run-1",
     link_threshold: float = _linking.DEFAULT_THRESHOLD,
     jaccard_dist: float = _canon.DEFAULT_JACCARD_DIST,
+    publish_bucketed: str | None = None,
+    n_buckets: int = 256,
     stage_timings: dict[str, float] | None = None,
     vocab_driver_max: int | None = None,
 ) -> dict[str, DataFrame]:
-    """Manifest-free pipeline for query/benchmark use: same semantics as
-    :func:`run_pipeline`, without the lineage manifest. Stage results are
-    materialized as parquet under a scratch dir (tmpfs by default) rather
-    than ``localCheckpoint`` — block-manager checkpoints accumulate on the
-    driver heap and cause erratic GC stalls over repeated runs, while a
-    parquet round-trip is off-heap and predictable. Pass
-    ``stage_timings={}`` to record per-stage wall-clock seconds."""
+    """pages → docs, mentions, triples, links, entity_map, nodes, edges.
+
+    One stage graph, with or without lineage:
+
+    1. ``extract``: the fused :func:`parse_stage`. With ``out_dir`` it is
+       one resumable url-bucketed stage written to ``{out_dir}/parsed``,
+       fingerprinted on (url, warc_ts) plus a fingerprint of the alias
+       dictionary (mentions depend on it); without, it is pinned to
+       scratch. ``docs``/``mentions``/``triples`` are JVM views of it.
+    2. ``linking`` + ``canonicalize``: :func:`entity_map_adaptive` over
+       one surface scan (``surfaces_view``). It runs lazily and once:
+       both global stages share the call, and a fully resumed run never
+       pays for it.
+    3. ``nodes`` + ``edges``: :func:`_build_outputs`.
+
+    With ``out_dir`` every global stage is keyed on the transitive
+    fingerprint of the upstream manifest rows plus
+    (``link_threshold``, ``jaccard_dist``), so a re-run with a changed
+    corpus, alias dictionary or threshold recomputes instead of serving
+    old output. The result then also carries ``manifest``.
+
+    ``publish_bucketed``: optional catalog database name — ALSO publish
+    the graph as bucketed tables ``{db}.nodes`` (by id) / ``{db}.edges``
+    (by src) via ``sources.bucketed.materialize_graph_bucketed``: the
+    write-once-shuffle layout where every downstream node⋈edge join
+    plans with zero Exchange. The returned dict then carries the
+    catalog-backed frames under ``nodes_bucketed`` / ``edges_bucketed``.
+
+    ``stage_timings={}`` records wall-clock seconds of ``parse`` and
+    ``link+canonicalize``; ``vocab_driver_max`` overrides the driver
+    fast-path ceiling (:func:`_vocab_driver_max`).
+    """
     import time as _time
 
     vmax = _vocab_driver_max() if vocab_driver_max is None else vocab_driver_max
@@ -476,148 +529,66 @@ def run_pipeline_in_memory(
 
     alias_rows = _linking.collect_alias_rows(aliases)
     alias_map = build_alias_map(alias_rows)
+    manifest = None if out_dir is None else Manifest(spark, f"{out_dir}/manifest")
 
     # ---- per-document stage: ONE fused Arrow pass, saved once (slim —
     # html is dead weight after extraction)
-    parsed = _pin(parse_stage(spark, pages, alias_map), "parsed")
+    if manifest is None:
+        parsed = _pin(parse_stage(spark, pages, alias_map), "parsed")
+    else:
+        # the alias fingerprint rides as a literal column: it enters every
+        # bucket's fingerprint, and parse_stage projects it away before
+        # the Arrow boundary
+        alias_fp = fingerprint(sorted(r.items()) for r in alias_rows)
+        parsed = run_stage(
+            spark, manifest, run_id, "extract",
+            pages.withColumn("_alias_fp", F.lit(alias_fp)), "url",
+            lambda d: parse_stage(spark, d, alias_map), f"{out_dir}/parsed",
+            fp_cols=["url", "warc_ts", "_alias_fp"],  # recrawl ⇒ new fingerprint
+        )
+        # approx-distinct-url telemetry across snapshots: bounded HLL
+        # registers per (run_id, stage) in the manifest's side table —
+        # audit-only, outside the resume fingerprint protocol (idempotent
+        # under re-runs: registers merge by max)
+        manifest.record_key_registers(run_id, "extract", parsed, "url")
     docs = parsed.select("url", "warc_ts", "lang", "text")
     mentions = mentions_view(parsed)
     triples = triples_view(parsed)
     _mark("parse")
 
-    # ---- vocabulary stages: size-adaptive
-    # ONE scan of the fused parse output instead of a 3-branch union
-    # (mentions ∪ subj ∪ obj) that re-read + re-exploded the parsed
-    # parquet three times: concat the per-doc surface arrays and explode
-    # once — the distinct surface SET is identical, and both consumers
-    # (the sorted driver fast path, the set-level distributed path) are
-    # order-independent (r6; measured 0.8 s → ~0.3 s at 20k pages).
-    surfaces_plan = (
-        parsed.select(
-            F.explode(
-                F.concat(
-                    F.transform("mentions", lambda m: m["surface"]),
-                    F.transform("triples", lambda t: t["subj"]),
-                    F.transform("triples", lambda t: t["obj"]),
-                )
-            ).alias("surface")
+    def global_stage(stage: str, table: str, fn, upstream: list[str]) -> DataFrame:
+        if manifest is None:
+            return fn()
+        input_fp = fingerprint(
+            [manifest.stage_fingerprint(run_id, upstream), link_threshold, jaccard_dist]
         )
-        .distinct()
-    )
-    links, entity_map = entity_map_adaptive(
-        spark, surfaces_plan, aliases, alias_rows, link_threshold, jaccard_dist, vmax
+        return run_global_stage(
+            spark, manifest, run_id, stage, fn, f"{out_dir}/{table}", input_fp=input_fp
+        )
+
+    # ---- vocabulary stages: size-adaptive, one call shared by both
+    vocab: dict[str, DataFrame] = {}
+
+    def _vocab() -> dict[str, DataFrame]:
+        if not vocab:
+            vocab["links"], vocab["entity_map"] = entity_map_adaptive(
+                spark, surfaces_view(parsed), aliases, alias_rows,
+                link_threshold, jaccard_dist, vmax,
+            )
+        return vocab
+
+    links = global_stage("linking", "links", lambda: _vocab()["links"], ["extract"])
+    entity_map = global_stage(
+        "canonicalize", "entity_map", lambda: _vocab()["entity_map"],
+        ["extract", "linking"],
     )
     _mark("link+canonicalize")
 
-    nodes, edges = _build_outputs(mentions, triples, entity_map)
-    return {
-        "docs": docs,
-        "mentions": mentions,
-        "triples": triples,
-        "links": links,
-        "entity_map": entity_map,
-        "nodes": nodes,
-        "edges": edges,
-    }
-
-
-def run_pipeline(
-    spark: SparkSession,
-    pages: DataFrame,
-    aliases: DataFrame,
-    out_dir: str,
-    run_id: str = "run-1",
-    link_threshold: float = _linking.DEFAULT_THRESHOLD,
-    jaccard_dist: float = _canon.DEFAULT_JACCARD_DIST,
-    publish_bucketed: str | None = None,
-    n_buckets: int = 256,
-) -> dict[str, DataFrame]:
-    """Full pipeline with per-bucket lineage + resume. Returns the
-    materialized DataFrames per stage. Stages stay SEPARATE here (unlike
-    the fused in-memory flavor) because each is a resume point with its
-    own manifest rows — the C12 contract.
-
-    ``publish_bucketed``: optional catalog database name — after the
-    edges stage, ALSO publish the graph as bucketed tables
-    ``{db}.nodes`` (by id) / ``{db}.edges`` (by src) via
-    ``sources.bucketed.materialize_graph_bucketed``: the write-once-
-    shuffle layout where every downstream node⋈edge join plans with
-    zero Exchange. The returned dict then carries the catalog-backed
-    frames under ``nodes_bucketed`` / ``edges_bucketed``."""
-    manifest = Manifest(spark, f"{out_dir}/manifest")
-    alias_rows = _linking.collect_alias_rows(aliases)
-    alias_map = build_alias_map(alias_rows)
-
-    docs = run_stage(
-        spark, manifest, run_id, "extract", pages, "url",
-        # html is dead weight once text is extracted — persist slim
-        lambda d: extract_stage(d).select("url", "warc_ts", "lang", "text"),
-        f"{out_dir}/docs",
-        fp_cols=["url", "warc_ts"],  # recrawl of a url ⇒ new fingerprint
-    )
-    # approx-distinct-url telemetry across snapshots: bounded HLL
-    # registers per (run_id, stage) in the manifest's side table —
-    # audit-only, outside the resume fingerprint protocol (idempotent
-    # under re-runs: registers merge by max)
-    manifest.record_key_registers(run_id, "extract", docs, "url")
-    mentions = run_stage(
-        spark, manifest, run_id, "mentions", docs.select("url", "text"), "url",
-        lambda d: mentions_stage(spark, d, alias_map), f"{out_dir}/mentions",
-        fp_cols=["url", "text"],
-    )
-    triples = run_stage(
-        spark, manifest, run_id, "triples", docs.select("url", "text", "lang"), "url",
-        triples_stage, f"{out_dir}/triples",
-        fp_cols=["url", "text"],
-    )
-
-    # --- vocabulary-level: link every distinct surface seen anywhere.
-    # Pinned once, lazily — several stages consume it, but a fully
-    # resumed run must not pay for it at all.
-    _surf: dict[str, DataFrame] = {}
-
-    def all_surfaces() -> DataFrame:
-        if "df" not in _surf:
-            _surf["df"] = _pin(
-                mentions.select("surface")
-                .unionByName(triples.select(F.col("subj").alias("surface")))
-                .unionByName(triples.select(F.col("obj").alias("surface")))
-                .distinct(),
-                "surfaces",
-            )
-        return _surf["df"]
-
-    def _links() -> DataFrame:
-        return _linking.link_surfaces(spark, all_surfaces(), aliases, link_threshold)
-
-    url_stages = ["extract", "mentions", "triples"]
-    links = run_global_stage(
-        spark, manifest, run_id, "linking", _links, f"{out_dir}/links",
-        input_fp=manifest.stage_fingerprint(run_id, url_stages),
-    )
-
-    def _entity_map() -> DataFrame:
-        return _entity_map_distributed(spark, all_surfaces(), links, aliases, jaccard_dist)
-
-    entity_map = run_global_stage(
-        spark, manifest, run_id, "canonicalize", _entity_map, f"{out_dir}/entity_map",
-        input_fp=manifest.stage_fingerprint(run_id, url_stages + ["linking"]),
-    )
-
-    # --- materialize nodes/edges with canonical ids
-    def _nodes() -> DataFrame:
-        return _build_outputs(mentions, triples, entity_map)[0]
-
-    def _edges() -> DataFrame:
-        return _build_outputs(mentions, triples, entity_map)[1]
-
-    out_fp = manifest.stage_fingerprint(run_id, url_stages + ["linking", "canonicalize"])
-    nodes = run_global_stage(
-        spark, manifest, run_id, "nodes", _nodes, f"{out_dir}/nodes", input_fp=out_fp
-    )
-    edges = run_global_stage(
-        spark, manifest, run_id, "edges", _edges, f"{out_dir}/edges", input_fp=out_fp
-    )
+    # ---- materialize nodes/edges with canonical ids
+    nodes_plan, edges_plan = _build_outputs(mentions, triples, entity_map)
+    upstream = ["extract", "linking", "canonicalize"]
+    nodes = global_stage("nodes", "nodes", lambda: nodes_plan, upstream)
+    edges = global_stage("edges", "edges", lambda: edges_plan, upstream)
 
     result = {
         "docs": docs,
@@ -627,8 +598,9 @@ def run_pipeline(
         "entity_map": entity_map,
         "nodes": nodes,
         "edges": edges,
-        "manifest": manifest.read(),
     }
+    if manifest is not None:
+        result["manifest"] = manifest.read()
     if publish_bucketed is not None:
         from graphlab_spark.sources.bucketed import materialize_graph_bucketed
 
@@ -638,6 +610,23 @@ def run_pipeline(
         result["nodes_bucketed"] = nb
         result["edges_bucketed"] = eb
     return result
+
+
+def run_pipeline_in_memory(
+    spark: SparkSession,
+    pages: DataFrame,
+    aliases: DataFrame,
+    link_threshold: float = _linking.DEFAULT_THRESHOLD,
+    jaccard_dist: float = _canon.DEFAULT_JACCARD_DIST,
+    stage_timings: dict[str, float] | None = None,
+    vocab_driver_max: int | None = None,
+) -> dict[str, DataFrame]:
+    """:func:`run_pipeline` without a lineage manifest (``out_dir=None``)."""
+    return run_pipeline(
+        spark, pages, aliases, None, link_threshold=link_threshold,
+        jaccard_dist=jaccard_dist, stage_timings=stage_timings,
+        vocab_driver_max=vocab_driver_max,
+    )
 
 
 def forget_urls(

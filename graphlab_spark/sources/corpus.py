@@ -311,10 +311,6 @@ def page_record(i: int, heavy: bool = False) -> dict:
     }
 
 
-def generate_pages_local(n_pages: int) -> list[dict]:
-    return [page_record(i) for i in range(n_pages)]
-
-
 def generate_pages(
     spark: SparkSession,
     n_pages: int,

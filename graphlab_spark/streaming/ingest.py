@@ -105,7 +105,11 @@ def start_ingest(
     same size-adaptive switch as the batch pipeline (driver fast path up
     to the ceiling, distributed above or on clustered input).
     """
-    from graphlab_spark.plans.pipeline import _vocab_driver_max, entity_map_adaptive
+    from graphlab_spark.plans.pipeline import (
+        _build_outputs,
+        _vocab_driver_max,
+        entity_map_adaptive,
+    )
 
     import hashlib
 
@@ -123,7 +127,11 @@ def start_ingest(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from graphlab_spark.operators.parse import mentions_view, triples_view
+        from graphlab_spark.operators.parse import (
+            mentions_view,
+            surfaces_view,
+            triples_view,
+        )
         from graphlab_spark.operators.scratch import cleanup_prefix, materialize
 
         if cumulative:
@@ -203,29 +211,11 @@ def start_ingest(
                     },
                 )
             else:
-                surfaces_plan = (
-                    mentions.select("surface")
-                    .unionByName(triples.select(F.col("subj").alias("surface")))
-                    .unionByName(triples.select(F.col("obj").alias("surface")))
-                    .distinct()
-                )
                 _, entity_map = entity_map_adaptive(
-                    spark, surfaces_plan, aliases, alias_rows,
+                    spark, surfaces_view(parsed), aliases, alias_rows,
                     link_threshold, jaccard_dist, vmax, pin_prefix=f"{btag}_",
                 )
-                linked = mentions.join(entity_map, "surface").select(
-                    F.col("entity_id").alias("canonical_id"), "surface", "m_type"
-                )
-                nodes = _mat.build_nodes(linked)
-                t = (
-                    triples.join(entity_map.withColumnRenamed("surface", "subj"), "subj")
-                    .withColumnRenamed("entity_id", "subj_id")
-                    .join(entity_map.withColumnRenamed("surface", "obj"), "obj")
-                    .withColumnRenamed("entity_id", "obj_id")
-                )
-                edges = _mat.build_edges(
-                    t.select("subj_id", "pred", "obj_id", "url", "conf")
-                )
+                nodes, edges = _build_outputs(mentions, triples, entity_map)
                 # Idempotent MERGE (B1): a replayed batch rewrites the
                 # same rows (latest-wins per key; no markers needed)
                 _mat.merge_upsert(

@@ -48,7 +48,7 @@ def test_forget_urls_equals_cold_run_and_is_bounded(spark, tmp_path):
     assert got["triples"].filter(F.col("url").isin(victims)).count() == 0
 
     # recompute bound: new manifest rows cover only the victims' buckets
-    # across the 3 url-keyed stages (+ global vocabulary stages, which
+    # of the url-keyed extract stage (+ global vocabulary stages, which
     # carry a transitive fingerprint and must recompute)
     touched = (
         spark.createDataFrame([(u,) for u in victims], "url string")
@@ -58,7 +58,7 @@ def test_forget_urls_equals_cold_run_and_is_bounded(spark, tmp_path):
     )
     rows_after = spark.read.parquet(f"{out}/manifest").count()
     new_rows = rows_after - rows_before
-    url_stages, global_stages = 3, 5
+    url_stages, global_stages = 1, 5
     assert new_rows <= url_stages * touched + global_stages + 2
     # and it genuinely resumed: far fewer rows than a full re-run writes
     assert new_rows < rows_before / 2

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from graphlab_spark.operators.extract import dedup_pages, extract_stage
 from graphlab_spark.operators.manifest import Manifest
-from graphlab_spark.plans.pipeline import run_pipeline, run_stage
+from graphlab_spark.plans.pipeline import run_pipeline, run_pipeline_in_memory, run_stage
 from graphlab_spark.sources import corpus
 
 N = 150
@@ -72,7 +72,7 @@ def test_manifest_rows_span_their_stage(spark, out_dir, result):
     """A cold run's manifest rows carry the stage's real start time, not
     a zero-length span at the moment the rows were written."""
     rows = Manifest(spark, f"{out_dir}/manifest").read().collect()
-    assert {r.stage for r in rows} >= {"extract", "mentions", "triples", "edges"}
+    assert {r.stage for r in rows} == {"extract", "linking", "canonicalize", "nodes", "edges"}
     for r in rows:
         assert r.started_at < r.finished_at, (r.stage, r.partition_id)
 
@@ -146,3 +146,80 @@ def test_parse_arrow_structs_match_spark_structs():
         ("conf", pa.float64()),
         ("sent_no", pa.int32()),
     ]
+
+
+def _graph(res) -> dict:
+    """Sorted rows of the graph tables and the vocabulary tables they
+    come from (floats rounded: sums depend on summation order)."""
+    cols = {
+        "nodes": ["*"],
+        "edges": ["src", "pred", "dst", "n_evidence", "evidence", F.round("weight", 6)],
+        "links": ["surface", "canonical_id", "entity_type", F.round("score", 9), "method"],
+        "entity_map": ["*"],
+    }
+    return {k: sorted(tuple(r) for r in res[k].select(*c).collect()) for k, c in cols.items()}
+
+
+@pytest.fixture(scope="module")
+def small_run(spark, tmp_path_factory):
+    """A cold run over 60 pages with the default config: (out_dir, graph)."""
+    out = str(tmp_path_factory.mktemp("kg_small"))
+    pages = corpus.generate_pages(spark, 60)
+    return out, _graph(run_pipeline(spark, pages, corpus.alias_df(spark), out))
+
+
+@pytest.mark.parametrize("change", ["alias_row_removed", "higher_link_threshold"])
+def test_config_change_never_serves_stale_output(spark, tmp_path, small_run, change):
+    """Re-running on the same out_dir/run_id with a changed alias
+    dictionary or link threshold equals a cold run with the new config:
+    the alias dictionary is part of every parse bucket's fingerprint and
+    the thresholds are part of every global stage's. (At 0.9 the fuzzy
+    typo links below it drop out; canonicalization still merges those
+    typos, so here the threshold moves links, not the graph.)"""
+    pages = corpus.generate_pages(spark, 60)
+    aliases = corpus.alias_df(spark)
+    out = str(tmp_path / "kg")
+    shutil.copytree(small_run[0], out)
+    before = small_run[1]
+
+    kwargs = {}
+    if change == "alias_row_removed":
+        aliases = aliases.filter(
+            ~((F.col("canonical_id") == "org:acme-systems") & F.col("is_primary"))
+        )
+        assert aliases.count() == corpus.alias_df(spark).count() - 1
+    else:
+        kwargs["link_threshold"] = 0.9
+    got = _graph(run_pipeline(spark, pages, aliases, out, **kwargs))
+    cold = _graph(run_pipeline_in_memory(spark, pages, aliases, **kwargs))
+    assert cold != before, "the config change must matter for this test to mean anything"
+    assert got == cold
+
+
+def test_old_stage_layout_recomputes_every_bucket(spark, tmp_path, result):
+    """An out_dir written by the unfused layout (an ``extract`` stage of
+    text-only docs under ``{out}/docs``, with its manifest rows) must not
+    be resumed from: every bucket recomputes and the graph equals a cold
+    run."""
+    out = str(tmp_path / "old_layout")
+    pages = corpus.generate_pages(spark, N)
+    aliases = corpus.alias_df(spark)
+    manifest = Manifest(spark, f"{out}/manifest")
+    run_stage(
+        spark, manifest, "run-1", "extract", pages, "url",
+        lambda d: extract_stage(d).select("url", "warc_ts", "lang", "text"),
+        f"{out}/docs", fp_cols=["url", "warc_ts"],
+    )
+    old_buckets = {
+        r.partition_id for r in manifest.completed_partitions("run-1", "extract").collect()
+    }
+    assert old_buckets
+
+    def extract_rows():
+        m = Manifest(spark, f"{out}/manifest").read()
+        return m.filter((F.col("stage") == "extract") & (F.col("input_fp") != -1)).count()
+
+    n_old = extract_rows()
+    got = run_pipeline(spark, pages, aliases, out)
+    assert extract_rows() - n_old == len(old_buckets)
+    assert _graph(got) == _graph(result)

@@ -85,18 +85,51 @@ def test_vocab_driver_path_equals_distributed(spark):
 # number must update it on purpose.
 PIPELINE_JOB_BUDGET = 7
 
+# Spark jobs launched by the resumable run_pipeline over N pages at
+# local[8]: a cold run into an empty out_dir, then a re-run that finds
+# every stage done. With three Arrow passes (extract, mentions, triples
+# as separate resumable stages) and distributed linking on every run,
+# these were 119 and 50.
+RESUMABLE_COLD_JOB_BUDGET = 62
+RESUMABLE_NOOP_JOB_BUDGET = 26
 
-def test_run_pipeline_in_memory_job_budget(spark):
+
+def _jobs_launched(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted via one job group."""
     sc = spark.sparkContext
-    pages = corpus.generate_pages(spark, N)
-    aliases = corpus.alias_df(spark)
-    group = "test_pipeline_job_budget"
-    sc.setJobGroup(group, "run_pipeline_in_memory job budget")
+    sc.setJobGroup(group, group)
     try:
-        run_pipeline_in_memory(spark, pages, aliases)
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == PIPELINE_JOB_BUDGET
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_pipeline_in_memory_job_budget(spark):
+    pages = corpus.generate_pages(spark, N)
+    aliases = corpus.alias_df(spark)
+    jobs = _jobs_launched(
+        spark, "test_pipeline_job_budget",
+        lambda: run_pipeline_in_memory(spark, pages, aliases),
+    )
+    assert jobs == PIPELINE_JOB_BUDGET
+
+
+def test_run_pipeline_resumable_job_budget(spark, tmp_path):
+    from graphlab_spark.plans.pipeline import run_pipeline
+
+    pages = corpus.generate_pages(spark, N)
+    aliases = corpus.alias_df(spark)
+    out = str(tmp_path / "kg")
+    cold = _jobs_launched(
+        spark, "test_resumable_cold_budget",
+        lambda: run_pipeline(spark, pages, aliases, out),
+    )
+    noop = _jobs_launched(
+        spark, "test_resumable_noop_budget",
+        lambda: run_pipeline(spark, pages, aliases, out),
+    )
+    assert (cold, noop) == (RESUMABLE_COLD_JOB_BUDGET, RESUMABLE_NOOP_JOB_BUDGET)
 
 
 # ---------------------------------------------------- salted join / salt

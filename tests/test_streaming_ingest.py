@@ -23,6 +23,26 @@ def _drop_increment(spark, path: str, lo: int, hi: int) -> None:
     ).parquet(path)
 
 
+def edge_rows(df):
+    return {
+        tuple(r)
+        for r in df.select(
+            "src", "pred", "dst", "n_evidence",
+            F.col("evidence").cast("string"), F.round("weight", 6),
+        ).collect()
+    }
+
+
+def node_rows(df):
+    return {
+        tuple(r)
+        for r in df.select(
+            "id", "canonical_name", "entity_type",
+            F.col("aliases").cast("string"), "n_mentions",
+        ).collect()
+    }
+
+
 def test_streaming_increments_match_batch(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
@@ -58,24 +78,6 @@ def test_streaming_increments_match_batch(spark, tmp_path):
     # inside the same increment, so per-url dedup sees them together.)
     from graphlab_spark.plans.pipeline import run_pipeline_in_memory
 
-    def edge_rows(df):
-        return {
-            tuple(r)
-            for r in df.select(
-                "src", "pred", "dst", "n_evidence",
-                F.col("evidence").cast("string"), F.round("weight", 6),
-            ).collect()
-        }
-
-    def node_rows(df):
-        return {
-            tuple(r)
-            for r in df.select(
-                "id", "canonical_name", "entity_type",
-                F.col("aliases").cast("string"), "n_mentions",
-            ).collect()
-        }
-
     batch = run_pipeline_in_memory(spark, corpus.generate_pages(spark, N), aliases)
     assert edge_rows(edges) == edge_rows(batch["edges"])
     assert node_rows(nodes) == node_rows(batch["nodes"])
@@ -102,6 +104,37 @@ def test_streaming_increments_match_batch(spark, tmp_path):
     )
     with pytest.raises(Exception, match="double"):
         q3.awaitTermination(120)
+
+
+def test_latest_wins_ingest_matches_batch_and_replays(spark, tmp_path):
+    """cumulative=False: one increment's nodes/edges equal the batch
+    pipeline over the same pages, and replaying the batch (a fresh
+    checkpoint re-reads the same drop) leaves both tables unchanged."""
+    from graphlab_spark.plans.pipeline import run_pipeline_in_memory
+
+    in_dir = str(tmp_path / "in_lw")
+    out_dir = str(tmp_path / "out_lw")
+    os.makedirs(in_dir)
+    aliases = corpus.alias_df(spark)
+    _drop_increment(spark, in_dir, 0, 60)
+
+    def ingest(ckpt: str):
+        q = start_ingest(
+            spark, read_pages_stream(spark, in_dir), aliases, out_dir,
+            str(tmp_path / ckpt), cumulative=False,
+        )
+        q.awaitTermination(300)
+        nodes = spark.read.parquet(f"{out_dir}/nodes")
+        edges = spark.read.parquet(f"{out_dir}/edges")
+        return node_rows(nodes), edge_rows(edges), nodes.count(), edges.count()
+
+    first = ingest("ckpt_lw")
+    batch = run_pipeline_in_memory(spark, corpus.generate_pages(spark, 60), aliases)
+    assert first == (
+        node_rows(batch["nodes"]), edge_rows(batch["edges"]),
+        batch["nodes"].count(), batch["edges"].count(),
+    )
+    assert ingest("ckpt_lw_replay") == first
 
 
 def test_streaming_reclaims_scratch_per_batch(spark, tmp_path):

@@ -6,7 +6,9 @@ north rule's required invocation mode):
         tools/drive_kg.py <out_dir> <n_pages> <cores>
 
 Generates the deterministic synthetic corpus, runs the resumable
-pipeline (`plans.pipeline.run_pipeline` — per-bucket lineage manifest),
+pipeline (`plans.pipeline.run_pipeline` with an out_dir: the fused parse
+as one url-bucketed `extract` stage under a per-bucket lineage manifest,
+then the `linking`, `canonicalize`, `nodes` and `edges` global stages),
 compares the materialized edges against the frozen-rule golden triple
 set, and prints one `VERIFY P=... R=...` line. Re-running against the
 same out_dir must skip all work (resume), including at a DIFFERENT core
