@@ -138,7 +138,7 @@ def connected_components(
     iteration; convergence checked every ``check_every`` iterations
     (each check is a job; variant components have tiny diameters).
     """
-    from graphlab_spark.operators.scratch import materialize
+    from graphlab_spark.operators.scratch import local_frame, materialize
 
     spark = edges.sparkSession
     # ONE evaluation decides the switch AND feeds the fast path: collect
@@ -148,11 +148,14 @@ def connected_components(
     # callers), and the size guard bounds the collect exactly as before.
     head = edges.select("a", "b").limit(driver_threshold + 1).collect()
     if len(head) <= driver_threshold:
-        rows = [(r[0], r[1]) for r in head]
-        mapping = _driver_union_find(rows)
-        if not mapping:
-            return spark.createDataFrame([], "item_id string, component_id string")
-        return spark.createDataFrame(mapping, "item_id string, component_id string")
+        mapping = _driver_union_find([(r[0], r[1]) for r in head])
+        # numeric ids (semdedup's long vec ids) label as their decimal
+        # strings, as the declared schema says
+        return local_frame(
+            spark,
+            [(str(i), str(c)) for i, c in mapping],
+            "item_id string, component_id string",
+        )
     sym = materialize(
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))

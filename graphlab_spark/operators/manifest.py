@@ -135,6 +135,10 @@ class Manifest:
             and r["status"] == "completed"
         )
 
+    def stages(self) -> set[str]:
+        """Stage names with at least one manifest row (any run, any status)."""
+        return {r["stage"] for r in self._rows()}
+
     _MISSING = object()
 
     def latest_completed_fp(self, run_id: str, stage: str, partition_id: int = 0):
@@ -216,9 +220,9 @@ class Manifest:
     # is the bounded mergeable answer: ≤ 2^p rows per (run, stage),
     # merged across snapshots by bucket-wise MAX. The table is a pure
     # AUDIT side table — appended outside the resume fingerprint
-    # protocol, never data-bearing; appending the same registers twice
-    # (a resumed run) cannot change the merged estimate (max is
-    # idempotent).
+    # protocol, never data-bearing. ``run_stage`` appends the registers
+    # of the rows each call writes; registers of a key appended twice
+    # cannot change the merged estimate (max is idempotent).
 
     def record_key_registers(
         self, run_id: str, stage: str, data: DataFrame, key_col: str = "url",

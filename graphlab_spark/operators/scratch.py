@@ -9,7 +9,8 @@ storage on the distributed FS instead of driver memory.
 
 Every hot path that needs to pin an intermediate result (cut lineage,
 reuse a result twice without recompute) goes through :func:`materialize`
-so the policy lives in one place.
+so the policy lives in one place. Every frame the driver builds from its
+own rows goes through :func:`local_frame`, so Catalyst sees its real size.
 """
 
 from __future__ import annotations
@@ -19,7 +20,8 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 _counter = [0]
 _root: list[str] = []
@@ -147,14 +149,43 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-built ``rows`` (flat tuples in the order of the DDL
+    ``schema``) as a DataFrame whose size the planner knows.
+
+    ``createDataFrame(list)`` plans as a ``Scan ExistingRDD`` of unknown
+    size, so a join never broadcasts it: on kg_build the planner
+    broadcast the data-sized triples instead and sort-merge-joined the
+    490-row entity map. An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation`` with exact statistics (an RDD above it), so joins
+    against it broadcast exactly while it is small, with no hint. Zero
+    rows give an empty ``LocalRelation`` of the same schema.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def materialize(df: DataFrame, name: str = "stage") -> DataFrame:
     """Write ``df`` to scratch parquet and read it back.
 
     The returned frame has flat parquet-scan lineage: safe to consume
     multiple times, to feed iterative loops, and to overwrite-from later
-    (never read-and-overwrite the same path in one plan).
+    (never read-and-overwrite the same path in one plan). It is read
+    back with the schema just written, which skips the one-task
+    schema-inference job a bare ``read.parquet`` launches per pin; the
+    read marks every field nullable, as an inferred read does.
     """
     _counter[0] += 1
     path = f"{scratch_dir()}/{name}-{_counter[0]}"
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)

@@ -24,10 +24,16 @@ Scale design:
   (eliminating ~10 fixed-cost shuffle jobs — the serial tail that caps
   scaling efficiency), and above the threshold the fully distributed
   path runs — byte-identical output, pinned by tests.
-- No explicit broadcast of vocabulary-DERIVED frames (links, entity_map):
-  AQE broadcasts only while they actually fit and splits skewed hot
-  surfaces otherwise. Broadcast is reserved for the alias dictionary
-  (north_star C11), which is guarded by a hard row-count ceiling.
+- No explicit broadcast of vocabulary-DERIVED frames (links, entity_map).
+  Every frame the driver builds (the fast path's links and entity_map,
+  the union-find components) is an Arrow local relation
+  (``scratch.local_frame``) whose exact size the planner sees, and every
+  pinned frame is a parquet scan with file-size statistics. So joins
+  against them broadcast while they fit — kg_build's ``edges`` plans as
+  two static broadcast joins of the 490-row entity map — and shuffle
+  otherwise, with AQE splitting skewed hot surfaces. The only broadcast
+  hint is on the alias dictionary (north_star C11), which is guarded by
+  a hard row-count ceiling.
 
 Resume contract: the url-keyed parse stage writes output parquet
 partitioned by a STABLE hash bucket of the url (not the physical
@@ -62,7 +68,7 @@ from graphlab_spark.operators.parse import (
     surfaces_view,
     triples_view,
 )
-from graphlab_spark.operators.scratch import materialize as _pin
+from graphlab_spark.operators.scratch import local_frame, materialize as _pin
 from graphlab_spark.functions.slug import slugify, slugify_udf
 from graphlab_spark.operators.linking import norm_key_udf
 
@@ -240,6 +246,11 @@ def run_stage(
         )
         return spark.createDataFrame([], out_df.schema)
 
+    # approx-distinct-key telemetry: HLL registers of the rows written
+    # in this call only (a no-op re-run writes none); the register table
+    # merges by max, so the estimate over all calls equals one over the
+    # whole table. Audit-only, outside the resume fingerprint protocol.
+    manifest.record_key_registers(run_id, stage, out_keyed, key_col)
     out_stats = out_keyed.groupBy("partition_id").agg(F.count(F.lit(1)).alias("rows_out"))
     # delete stale dirs only now, after the successful write; the real
     # stats row is recorded LAST so for a recomputed zero-output bucket
@@ -291,6 +302,26 @@ def run_global_stage(
     )
     manifest.record_completed(run_id, stage, stats, started_at=started_at)
     return spark.read.parquet(out_path)
+
+
+# Tables of the unfused layout, whose url-keyed stages were ``extract``
+# (into ``docs``), ``mentions`` and ``triples``; nothing reads them once
+# the fused ``extract`` stage has written ``parsed``.
+_OLD_LAYOUT_STAGES = {"mentions", "triples"}
+_OLD_LAYOUT_TABLES = ("docs", "mentions", "triples")
+
+
+def _drop_old_layout(spark: SparkSession, manifest: Manifest, out_dir: str) -> None:
+    """Delete the unfused layout's tables from an ``out_dir`` whose
+    manifest shows it was written by that layout (its stage rows stay:
+    the manifest is append-only)."""
+    if not _OLD_LAYOUT_STAGES & manifest.stages():
+        return
+    from graphlab_spark.streaming.exactly_once import _FS
+
+    fs = _FS(spark, out_dir)
+    for table in _OLD_LAYOUT_TABLES:
+        fs.delete(f"{out_dir}/{table}")  # no-op once gone
 
 
 def _new_entity_id(col):
@@ -347,14 +378,15 @@ def vocab_entity_map_small(
     em_rows = [
         (s, mapping[eid]) for s, eid in sorted(surf_entity.items()) if eid in mapping
     ]
-    links_df = spark.createDataFrame(
+    links_df = local_frame(
+        spark,
         [
             (r["surface"], r["canonical_id"], r["entity_type"], r["score"], r["method"])
             for r in link_rows
         ],
         LINKS_SCHEMA,
     )
-    entity_map_df = spark.createDataFrame(em_rows, "surface string, entity_id string")
+    entity_map_df = local_frame(spark, em_rows, "surface string, entity_id string")
     return links_df, entity_map_df
 
 
@@ -446,9 +478,14 @@ def entity_map_adaptive(
 def _build_outputs(
     mentions: DataFrame, triples: DataFrame, entity_map: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """nodes/edges from canonical entity_map. entity_map is vocabulary-sized
-    (or a local relation on the driver fast path) — join strategy left to
-    AQE/Catalyst, never a forced broadcast.
+    """nodes/edges from canonical entity_map. entity_map is vocabulary-sized:
+    a local relation of known size on the driver fast path, a pinned
+    parquet scan on the distributed path or when resumed. The planner
+    picks the join from those sizes, never a forced broadcast. On the
+    fast path both ``edges`` joins broadcast the map statically, and
+    ``edges.count()`` over 200 pages launches 4 jobs; it launched 6 while
+    the map was an RDD scan of unknown size and the planner broadcast
+    the triples instead (pinned in tests/test_round2_fixes.py).
 
     Batch runs build straight from the mention/triple rows
     (``build_nodes``/``build_edges``), not through the surface-keyed
@@ -546,11 +583,7 @@ def run_pipeline(
             lambda d: parse_stage(spark, d, alias_map), f"{out_dir}/parsed",
             fp_cols=["url", "warc_ts", "_alias_fp"],  # recrawl ⇒ new fingerprint
         )
-        # approx-distinct-url telemetry across snapshots: bounded HLL
-        # registers per (run_id, stage) in the manifest's side table —
-        # audit-only, outside the resume fingerprint protocol (idempotent
-        # under re-runs: registers merge by max)
-        manifest.record_key_registers(run_id, "extract", parsed, "url")
+        _drop_old_layout(spark, manifest, out_dir)
     docs = parsed.select("url", "warc_ts", "lang", "text")
     mentions = mentions_view(parsed)
     triples = triples_view(parsed)

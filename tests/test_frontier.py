@@ -78,9 +78,11 @@ def test_manifest_hll_tracks_distinct_urls_across_runs(spark, tmp_path):
     est = manifest.approx_distinct_keys(stages=["extract"])
     exact = first.select("url").unionByName(second.select("url")).distinct().count()
     assert abs(est - exact) / exact < 0.15, (est, exact)
-    # idempotent under re-runs: a resumed run re-appends registers,
-    # max-merge keeps the estimate identical
+    # a no-op re-run writes no rows, so it appends no registers and the
+    # estimate stays identical
+    n_regs = spark.read.parquet(f"{out}/manifest_hll").count()
     run_pipeline(spark, second, aliases, out, run_id="run-b")
+    assert spark.read.parquet(f"{out}/manifest_hll").count() == n_regs
     assert manifest.approx_distinct_keys(stages=["extract"]) == est
 
 

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from graphlab_spark.operators.extract import dedup_pages, extract_stage
 from graphlab_spark.operators.manifest import Manifest
+from graphlab_spark.operators.mentions import build_alias_map, mentions_stage
+from graphlab_spark.operators.triples import triples_stage
 from graphlab_spark.plans.pipeline import run_pipeline, run_pipeline_in_memory, run_stage
 from graphlab_spark.sources import corpus
 
@@ -198,18 +200,32 @@ def test_config_change_never_serves_stale_output(spark, tmp_path, small_run, cha
 
 def test_old_stage_layout_recomputes_every_bucket(spark, tmp_path, result):
     """An out_dir written by the unfused layout (an ``extract`` stage of
-    text-only docs under ``{out}/docs``, with its manifest rows) must not
-    be resumed from: every bucket recomputes and the graph equals a cold
-    run."""
+    text-only docs under ``{out}/docs``, then ``mentions`` and
+    ``triples`` stages, with their manifest rows) must not be resumed
+    from: every bucket recomputes, the graph equals a cold run, and the
+    old layout's tables are deleted."""
+    import os
+
     out = str(tmp_path / "old_layout")
     pages = corpus.generate_pages(spark, N)
     aliases = corpus.alias_df(spark)
+    alias_map = build_alias_map(r.asDict() for r in aliases.collect())
     manifest = Manifest(spark, f"{out}/manifest")
-    run_stage(
+    docs = run_stage(
         spark, manifest, "run-1", "extract", pages, "url",
         lambda d: extract_stage(d).select("url", "warc_ts", "lang", "text"),
         f"{out}/docs", fp_cols=["url", "warc_ts"],
     )
+    run_stage(
+        spark, manifest, "run-1", "mentions", docs.select("url", "text"), "url",
+        lambda d: mentions_stage(spark, d, alias_map), f"{out}/mentions",
+    )
+    run_stage(
+        spark, manifest, "run-1", "triples", docs.select("url", "text", "lang"), "url",
+        triples_stage, f"{out}/triples",
+    )
+    old_tables = ["docs", "mentions", "triples"]
+    assert all(os.path.isdir(f"{out}/{t}") for t in old_tables)
     old_buckets = {
         r.partition_id for r in manifest.completed_partitions("run-1", "extract").collect()
     }
@@ -223,3 +239,4 @@ def test_old_stage_layout_recomputes_every_bucket(spark, tmp_path, result):
     got = run_pipeline(spark, pages, aliases, out)
     assert extract_rows() - n_old == len(old_buckets)
     assert _graph(got) == _graph(result)
+    assert not any(os.path.exists(f"{out}/{t}") for t in old_tables)

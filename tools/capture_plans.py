@@ -1,16 +1,23 @@
-"""Capture .explain("formatted") output for the r6-touched queries.
+"""Capture ``.explain("formatted")`` output of named queries.
 
-Usage: python tools/capture_plans_r06.py <out_dir> <suffix> [name...]
+Usage, from the root of the tree whose plans you want::
 
-Writes <out_dir>/<name>_<suffix>.txt for each query. Names cover both
-registry entries (by registry name) and the bench-only operator paths
-(dedup_minhash, dedup_increment, ann_* at bench scale), built exactly
-the way bench.py builds them. Run from the tree whose plans you want
-(the round-start worktree for "before", HEAD for "after").
+    python tools/capture_plans.py --out plans/rNN --suffix before|after name...
+
+Writes ``<out>/<name>_<suffix>.txt`` per name. Names are registry
+entries (by registry name), the bench operator paths built the way
+bench.py builds them (dedup_minhash, ann_ivf, ...) and ``kg_edges``:
+the ``edges`` frame of ``run_pipeline_in_memory`` over kg_build's
+10,000 heavy pages. For a before/after pair, run the same command in a
+checkout of the parent commit (``--suffix before``) and in this tree
+(``--suffix after``); copy this script into the parent checkout if it
+predates it. Workers import the package from the working directory, so
+run from the root of the tree.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
@@ -23,6 +30,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from graphlab_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# kg_build's input size (perfbench/workloads.py BUILD_PAGES)
+KG_PAGES = 10_000
 
 
 def plan_text(df) -> str:
@@ -45,6 +54,12 @@ def build(spark, name):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     planted = DD.with_planted_near_dups(docs)
+    if name == "kg_edges":
+        from graphlab_spark.plans.pipeline import run_pipeline_in_memory
+        from graphlab_spark.sources import corpus
+
+        pages = corpus.generate_pages(spark, KG_PAGES, heavy=True)
+        return run_pipeline_in_memory(spark, pages, corpus.alias_df(spark))["edges"]
     fixdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
     )
@@ -100,15 +115,18 @@ def build(spark, name):
 
 
 def main() -> None:
-    out_dir, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
-    os.makedirs(out_dir, exist_ok=True)
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", required=True, help="output directory, e.g. plans/r08")
+    ap.add_argument("--suffix", required=True, help="file suffix, e.g. before or after")
+    ap.add_argument("names", nargs="+")
+    args = ap.parse_args()
+    os.makedirs(args.out, exist_ok=True)
     spark = get_spark("plan-capture")
-    for name in names:
+    for name in args.names:
         df = build(spark, name)
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
+        with open(os.path.join(args.out, f"{name}_{args.suffix}.txt"), "w") as fh:
             fh.write(plan_text(df))
-        print(f"captured {name}_{suffix}")
+        print(f"captured {name}_{args.suffix}")
 
 
 if __name__ == "__main__":

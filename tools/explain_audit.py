@@ -4,6 +4,11 @@ pruning effective, dimension joins broadcast, no accidental cartesian.
 
 Prints a PASS/WARN line per check plus the offending plan snippet.
 Run: python tools/explain_audit.py [sf_dir]
+
+``--sweep`` instead plans every registry entry and prints one line per
+entry: its shuffle-Exchange count and smells (row-at-a-time Python UDFs,
+CartesianProduct, many Arrow evals or shuffles). Informational; exits 0.
+Run: python tools/explain_audit.py --sweep [sf_dir]
 """
 
 from __future__ import annotations
@@ -29,12 +34,40 @@ def check(name: str, ok: bool, detail: str = "") -> bool:
     return ok
 
 
+def sweep(spark, sf_dir: str, registry) -> None:
+    """One line per registry entry: shuffle Exchange count and smells."""
+    for name, entry in registry.items():
+        try:
+            p = plan_of(entry.fn(spark, sf_dir))
+        except Exception as e:  # noqa: BLE001
+            print(f"{name:35s} ex=-1  PLAN-ERROR {type(e).__name__}: {e}")
+            continue
+        n_ex = p.count("Exchange") - p.count("BroadcastExchange") - p.count("ReusedExchange")
+        smells = []
+        if "BatchEvalPython" in p:
+            smells.append("BatchEvalPython(pickled-row UDF)")
+        if "CartesianProduct" in p:
+            smells.append("CartesianProduct")
+        if p.count("ArrowEvalPython") > 3:
+            smells.append(f"ArrowEvalPython x{p.count('ArrowEvalPython')}")
+        if n_ex > 6:
+            smells.append(f"shuffle Exchange x{n_ex}")
+        print(f"{name:35s} ex={n_ex:2d}  {'; '.join(smells) or 'ok'}")
+
+
 def main() -> None:
+    sweep_mode = "--sweep" in sys.argv
+    if sweep_mode:
+        sys.argv.remove("--sweep")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("explain-audit", shuffle_partitions=8)
     from graphlab_spark.plans.relational import REGISTRY
     import graphlab_spark.plans.event_queries  # noqa: F401
     import graphlab_spark.plans.training_queries  # noqa: F401
+
+    if sweep_mode:
+        sweep(spark, sf_dir, REGISTRY)
+        return
 
     ok_all = True
 
