@@ -28,15 +28,32 @@ import os
 import subprocess
 import sys
 
+_TOOLS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
+
 
 def hardware_control() -> float:
     """Raw multiprocessing wall over the scaling_bench per-doc kernel at
     the bench core count — measures the box, not Spark."""
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+    if _TOOLS not in sys.path:
+        sys.path.insert(0, _TOOLS)
     from scaling_bench import hardware_control as hc
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return hc(cpus, reps=1)
+
+
+def _result_line(stdout: str) -> dict:
+    """The last JSON object in ``stdout`` that carries ``"metric"``: a
+    ``{``-led line of other output (a logged dict, say) is skipped."""
+    for line in reversed(stdout.splitlines()):
+        if line.startswith("{"):
+            try:
+                parsed = json.loads(line)
+            except ValueError:
+                continue
+            if isinstance(parsed, dict) and "metric" in parsed:
+                return parsed
+    raise ValueError("bench.py printed no JSON result line with a 'metric' key")
 
 
 def main() -> None:
@@ -53,8 +70,7 @@ def main() -> None:
             text=True,
             check=True,
         )
-        line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-        parsed = json.loads(line)
+        parsed = _result_line(out.stdout)
         totals.append(parsed["value"])
         for name, sec in parsed["queries"].items():
             if name not in mins or sec < mins[name]:

@@ -45,7 +45,12 @@ from graphlab_spark.operators.dedup import (
     prehashed_col,
     shingled,
 )
-from graphlab_spark.operators.materialize import _table_exists
+from graphlab_spark.operators.scratch import (
+    _FS,
+    materialize,
+    replace_table,
+    table_exists,
+)
 
 
 # r6: the minhash permutation family changed (exact 31-bit Mersenne —
@@ -65,8 +70,6 @@ def _family_marker(index_dir: str) -> str:
 def stamp_sig_family(spark: SparkSession, index_dir: str) -> None:
     """Idempotently mark ``index_dir`` as signed with the CURRENT
     family. Writers call this after promoting sigs/bands."""
-    from graphlab_spark.streaming.exactly_once import _FS
-
     _FS(spark, index_dir).mkdirs(_family_marker(index_dir))
 
 
@@ -77,9 +80,7 @@ def _check_sig_family(spark: SparkSession, index_dir: str, old_sigs: DataFrame) 
     sample a few signatures — the legacy 61-bit family's values exceed
     2^31 with overwhelming probability (best-effort: a run of all-empty
     docs yields all-zero sigs the probe cannot classify)."""
-    from graphlab_spark.streaming.exactly_once import _FS
-
-    if _FS(spark, index_dir).exists(_family_marker(index_dir)):
+    if table_exists(spark, _family_marker(index_dir)):
         return
     rows = old_sigs.select("sig").head(8)
     if any(v >= (1 << 31) for r in rows for v in (r["sig"] or [])):
@@ -143,8 +144,6 @@ def apply_increment(
     index come from one join on (band, bucket) — the increment side is
     small, so AQE broadcasts it against the bucketed index.
     """
-    from graphlab_spark.operators.scratch import materialize
-
     new_sigs = materialize(sig_frame(new_docs), scratch_name)
     new_bands = bands_frame(new_sigs)
 
@@ -157,7 +156,7 @@ def apply_increment(
     # instead of three separate jobs (r6). The join keeps the same
     # scale shape the old semi-probe had: the increment side is small,
     # the index side is only its id column, and AQE picks the strategy.
-    have_index = _table_exists(spark, f"{index_dir}/sigs")
+    have_index = table_exists(spark, f"{index_dir}/sigs")
     probe = new_sigs.select("doc_id")
     if have_index:
         old_sigs = spark.read.parquet(f"{index_dir}/sigs")
@@ -236,13 +235,10 @@ def dedup_increment(
     path; NOT crash-atomic across the two tables, use
     :func:`start_dedup_stream` for that), return the verified pairs
     materialized (so callers can consume them after the index moved)."""
-    from graphlab_spark.operators.scratch import materialize
-
     r = apply_increment(spark, index_dir, new_docs, threshold)
     pairs = materialize(r["pairs"], "dedup_inc_pairs")
     for name in ("sigs", "bands"):
-        out = materialize(r[name], f"dedup_inc_{name}")
-        out.write.mode("overwrite").parquet(f"{index_dir}/{name}")
+        replace_table(r[name], f"{index_dir}/{name}", f"dedup_inc_{name}")
     stamp_sig_family(spark, index_dir)
     return pairs
 
@@ -292,7 +288,7 @@ def start_dedup_stream(
 
             def _pairs():
                 p = r["pairs"]
-                if _table_exists(spark, f"{index_dir}/pairs"):
+                if table_exists(spark, f"{index_dir}/pairs"):
                     p = spark.read.parquet(f"{index_dir}/pairs").unionByName(p)
                 return p
 

@@ -91,7 +91,7 @@ def frontier_add(
     """Fold an increment in: append its keys, OR in its bits (the bloom
     table stays ≤ n_bits rows — union-distinct rewrite of a tiny
     table; the url append is O(increment))."""
-    from graphlab_spark.operators.scratch import cleanup_prefix, materialize
+    from graphlab_spark.operators.scratch import cleanup_prefix, replace_table
 
     new_seen.select(F.col(key)).distinct().write.mode("append").parquet(
         f"{frontier_dir}/urls"
@@ -100,8 +100,9 @@ def frontier_add(
     new_bits = bloom_build(
         new_seen.select(F.col(key).alias("value")), "value", n_hashes, n_bits
     )
-    merged = materialize(
-        old_bits.unionByName(new_bits).distinct(), "frontier_bloom_merge"
+    replace_table(
+        old_bits.unionByName(new_bits).distinct(),
+        f"{frontier_dir}/bloom",
+        "frontier_bloom_merge",
     )
-    merged.write.mode("overwrite").parquet(f"{frontier_dir}/bloom")
     cleanup_prefix("frontier_bloom_merge")

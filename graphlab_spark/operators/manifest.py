@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from graphlab_spark.operators.scratch import table_exists
+
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -46,6 +48,9 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("finished_at", T.TimestampType(), True),
     ]
 )
+
+# the ``{path}_hll`` side table (``record_key_registers``)
+HLL_SCHEMA = "run_id string, stage string, bucket long, reg int"
 
 N_BUCKETS = 64
 
@@ -76,10 +81,12 @@ class Manifest:
         self._snap: list[dict] | None = None
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        """The ledger, read with :data:`MANIFEST_SCHEMA` (no
+        schema-inference job; a pre-fingerprint manifest's ``input_fp``
+        reads as null), or an empty ledger before the first append."""
+        if not table_exists(self.spark, self.path):
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def _rows(self) -> list[dict]:
         """Driver-side snapshot of the (tiny, bucket-count-sized) table,
@@ -90,8 +97,6 @@ class Manifest:
         buckets, never data-sized."""
         if self._snap is None:
             self._snap = [r.asDict() for r in self.read().collect()]
-            for r in self._snap:
-                r.setdefault("input_fp", None)
         return self._snap
 
     def completed_partitions(self, run_id: str, stage: str) -> DataFrame:
@@ -105,8 +110,6 @@ class Manifest:
         from pyspark.sql import Window
 
         df = self.read()
-        if "input_fp" not in df.columns:  # pre-fingerprint manifest
-            df = df.withColumn("input_fp", F.lit(None).cast("long"))
         w = Window.partitionBy("partition_id").orderBy(F.col("finished_at").desc())
         return (
             df.filter(
@@ -254,7 +257,7 @@ class Manifest:
         the estimate over N runs never rescans any run's data."""
         from graphlab_spark.operators.sketch import hll_estimate
 
-        t = self.spark.read.parquet(f"{self.path}_hll")
+        t = self.spark.read.schema(HLL_SCHEMA).parquet(f"{self.path}_hll")
         if run_ids is not None:
             t = t.filter(F.col("run_id").isin(run_ids))
         if stages is not None:

@@ -22,6 +22,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphlab_spark.operators.scratch import replace_table, table_exists
+
 NODES_COLS = ["id", "canonical_name", "entity_type", "aliases", "n_mentions"]
 EDGES_COLS = ["src", "pred", "dst", "n_evidence", "evidence", "weight"]
 
@@ -55,7 +57,7 @@ def merge_into_sql(
     interpolated — this is the injection surface the reference guards.
 
     ``additive=True`` emits the cumulative-rollup form (``UPDATE SET
-    t.c = t.c + s.c``) matching :func:`merge_upsert_additive`.
+    t.c = t.c + s.c``) whose parquet plan is :func:`additive_frame`.
     """
     validate_output_name(source_view)
     for part in target_table.split("."):
@@ -141,12 +143,7 @@ def apply_graph_delta(
     # one anti-join drops removed AND stale-changed rows; upserts re-add
     # the changed rows at their new weight
     kept = existing.join(touched.select(*ks), ks, "left_anti")
-    merged = kept.unionByName(upserts)
-    from graphlab_spark.operators.scratch import materialize
-
-    merged = materialize(merged, scratch_name)
-    merged.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return replace_table(kept.unionByName(upserts), path, scratch_name)
 
 
 def build_nodes(linked_mentions: DataFrame) -> DataFrame:
@@ -285,10 +282,11 @@ def merge_upsert(
     ref neo4j_client.py:29-39) so a caller-supplied table name cannot
     escape the output directory or inject into a SQL sink.
 
-    Only a genuinely-missing table selects the first-write path; any
-    other read failure (corrupt footer, permission error, fs hiccup)
-    re-raises — silently treating it as first-write would overwrite the
-    table with just the updates (data loss).
+    Only a genuinely-missing table selects the first-write path
+    (``scratch.table_exists``); any other read failure (corrupt footer,
+    permission error, fs hiccup) re-raises — silently treating it as
+    first-write would overwrite the table with just the updates (data
+    loss).
 
     ``scratch_name``: long-running callers that reclaim scratch between
     batches (streaming) pass a name unique to their query+batch so their
@@ -296,45 +294,13 @@ def merge_upsert(
     in-flight merge scratch.
     """
     validate_output_name(os.path.basename(os.path.normpath(path)))
-    if _table_exists(spark, path):
+    if table_exists(spark, path):
         existing = spark.read.parquet(path)
         kept = existing.join(updates.select(*keys), keys, "left_anti")
         merged = kept.unionByName(updates)
     else:
         merged = updates
-    # Materialize off-heap before overwriting so we never read-overwrite
-    # the same path in one plan (and never pin driver heap à la
-    # localCheckpoint).
-    from graphlab_spark.operators.scratch import materialize
-
-    merged = materialize(merged, scratch_name)
-    merged.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def merge_upsert_additive(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    add_cols: list[str],
-    scratch_name: str = "merge_upsert",
-) -> DataFrame:
-    """Cumulative MERGE into a parquet rollup table: WHEN MATCHED →
-    ``t.c = t.c + s.c`` for every ``add_cols`` column, WHEN NOT MATCHED →
-    insert. The Iceberg statement is ``merge_into_sql(..., additive=True)``;
-    this parquet emulation is union + one hash aggregate on ``keys`` —
-    map-side partial agg collapses each partition to one row per key
-    before the single exchange, so shuffle volume is O(distinct keys)
-    regardless of update volume. Duplicate keys WITHIN ``updates`` fold
-    additively too (same contract as MERGE over a pre-aggregated source).
-    """
-    merged = additive_frame(spark, path, updates, keys, add_cols)
-    from graphlab_spark.operators.scratch import materialize
-
-    merged = materialize(merged, scratch_name)
-    merged.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return replace_table(merged, path, scratch_name)
 
 
 def additive_frame(
@@ -344,15 +310,21 @@ def additive_frame(
     keys: list[str],
     add_cols: list[str],
 ) -> DataFrame:
-    """The merged-table PLAN behind :func:`merge_upsert_additive` —
-    reads the live table lazily, so staged-commit callers
+    """Cumulative MERGE plan for a parquet rollup table: WHEN MATCHED →
+    ``t.c = t.c + s.c`` for every ``add_cols`` column, WHEN NOT MATCHED →
+    insert (the Iceberg statement is ``merge_into_sql(...,
+    additive=True)``). Union + one hash aggregate on ``keys``: map-side
+    partial aggregation collapses each partition to one row per key
+    before the single exchange, so shuffle volume is O(distinct keys).
+    Duplicate keys WITHIN ``updates`` fold additively too. Reads the
+    live table lazily, so staged-commit callers
     (streaming/exactly_once.py) can write it to a staging path without
     touching the live table."""
     validate_output_name(os.path.basename(os.path.normpath(path)))
     for c in keys + add_cols:
         validate_output_name(c)
     updates = updates.select(*keys, *add_cols)
-    if _table_exists(spark, path):
+    if table_exists(spark, path):
         updates = spark.read.parquet(path).select(*keys, *add_cols).unionByName(updates)
     return updates.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in add_cols])
 
@@ -383,11 +355,7 @@ def merge_upsert_combine(
     (streaming/exactly_once.py BatchCommitter is the provided harness).
     """
     merged = combined_frame(spark, path, updates, keys, combine)
-    from graphlab_spark.operators.scratch import materialize
-
-    merged = materialize(merged, scratch_name)
-    merged.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return replace_table(merged, path, scratch_name)
 
 
 def combined_frame(
@@ -423,7 +391,7 @@ def combined_frame(
                 "(a duplicate would fan out the merge join and compound "
                 "counts every batch)"
             )
-    if _table_exists(spark, path):
+    if table_exists(spark, path):
         existing = spark.read.parquet(path)
         extra = set(existing.columns) - set(updates.columns)
         if extra:
@@ -485,16 +453,6 @@ def edges_combine(max_evidence: int = 3) -> dict:
     }
 
 
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    """Explicit missing-path check via the JVM Hadoop FS API — distinguishes
-    'table not created yet' from read errors that must propagate."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -515,8 +473,6 @@ def compact_table(
     test); the rewrite goes through scratch so the source is never read
     and overwritten in one plan.
     """
-    from graphlab_spark.operators.scratch import materialize
-
     validate_output_name(os.path.basename(os.path.normpath(path)))
     df = spark.read.parquet(path)
     if partition_col is not None:
@@ -537,9 +493,4 @@ def compact_table(
         df = df.repartition(files_per_partition)
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
-    pinned = materialize(df, "compact")
-    w = pinned.write.mode("overwrite")
-    if partition_col is not None:
-        w = w.partitionBy(partition_col)
-    w.parquet(path)
-    return spark.read.parquet(path)
+    return replace_table(df, path, "compact", partition_by=partition_col)

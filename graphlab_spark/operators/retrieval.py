@@ -195,7 +195,7 @@ def index_add(
     contract). Only touched terms change content; the parquet emulation
     rewrites the table (on Iceberg this is ONE MERGE on the term key —
     the merge_into_sql seam)."""
-    from graphlab_spark.operators.scratch import cleanup_prefix, materialize
+    from graphlab_spark.operators.scratch import cleanup_prefix, replace_table
 
     inc = inverted_index(new_docs, n_shards, id_col, text_col)
     old = spark.read.parquet(f"{index_dir}/terms")
@@ -227,8 +227,7 @@ def index_add(
             merged_posts.alias("postings"),
         )
     )
-    pinned = materialize(merged, "invidx_merge")  # never read+overwrite one path
-    pinned.write.mode("overwrite").partitionBy("shard").parquet(f"{index_dir}/terms")
+    replace_table(merged, f"{index_dir}/terms", "invidx_merge", partition_by="shard")
     cleanup_prefix("invidx_merge")
 
 

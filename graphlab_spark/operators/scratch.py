@@ -1,4 +1,4 @@
-"""Off-heap stage materialization via scratch parquet.
+"""Scratch pins and the persisted-table seam.
 
 Why not ``localCheckpoint()``: block-manager checkpoints live on the
 DRIVER heap; over repeated runs they accumulate and cause erratic GC
@@ -11,6 +11,14 @@ Every hot path that needs to pin an intermediate result (cut lineage,
 reuse a result twice without recompute) goes through :func:`materialize`
 so the policy lives in one place. Every frame the driver builds from its
 own rows goes through :func:`local_frame`, so Catalyst sees its real size.
+
+Accumulated tables (merge targets, dedup indexes, frontiers, recrawl
+publications) are probed with :func:`table_exists`, one Hadoop-FS call
+that works for local paths and ``file://``/``hdfs://``/``s3a://`` URIs
+alike, and rewritten with :func:`replace_table`, which pins the next
+version before overwriting and reads it back with the schema it wrote.
+An existing table that cannot be read raises at its read; it is never
+mistaken for a missing one and rebuilt from an increment.
 """
 
 from __future__ import annotations
@@ -189,3 +197,59 @@ def materialize(df: DataFrame, name: str = "stage") -> DataFrame:
     path = f"{scratch_dir()}/{name}-{_counter[0]}"
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+class _FS:
+    """Thin Hadoop-FS wrapper (works for file://, hdfs://, s3a://...)."""
+
+    def __init__(self, spark: SparkSession, any_path: str):
+        jvm = spark.sparkContext._jvm
+        self._Path = jvm.org.apache.hadoop.fs.Path
+        self._fs = self._Path(any_path).getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration()
+        )
+
+    def exists(self, p: str) -> bool:
+        return bool(self._fs.exists(self._Path(p)))
+
+    def mkdirs(self, p: str) -> None:
+        self._fs.mkdirs(self._Path(p))
+
+    def delete(self, p: str) -> None:
+        self._fs.delete(self._Path(p), True)
+
+    def rename(self, src: str, dst: str) -> bool:
+        return bool(self._fs.rename(self._Path(src), self._Path(dst)))
+
+    def list_names(self, p: str) -> list[str]:
+        """Child entry names of directory ``p`` ([] if it doesn't exist)."""
+        if not self.exists(p):
+            return []
+        return [s.getPath().getName() for s in self._fs.listStatus(self._Path(p))]
+
+
+def table_exists(spark: SparkSession, path: str) -> bool:
+    """Whether a table directory exists at ``path`` — a driver-side
+    Hadoop-FS call, no Spark job. It says nothing about readability on
+    purpose: a caller that finds the table reads it, and a corrupt table
+    raises there instead of reading as "not created yet"."""
+    return _FS(spark, path).exists(path)
+
+
+def replace_table(
+    df: DataFrame, path: str, name: str, partition_by: str | None = None
+) -> DataFrame:
+    """Overwrite the table at ``path`` with ``df`` and return it read back.
+
+    ``df`` may read ``path`` itself (the table merged with an increment):
+    it is pinned to scratch under ``name`` first, so no plan reads and
+    overwrites one path. The read-back uses the schema just written, so
+    it launches no schema-inference job; partition columns read last,
+    as on any partitioned read.
+    """
+    pinned = materialize(df, name)
+    w = pinned.write.mode("overwrite")
+    if partition_by is not None:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
+    return df.sparkSession.read.schema(pinned.schema).parquet(path)

@@ -29,15 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphlab_spark.operators.scratch import materialize, replace_table, table_exists
 from graphlab_spark.operators.semdedup import _cell_pairs, assign_cells
-
-
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
 
 
 def retention_frame(vecs: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -77,9 +70,10 @@ def apply_increment(
          "vecs":      full updated (vec_id, cell_id, embedding),
          "pairs":     full updated accumulated edge set,
          "retention": (vec_id, cell_id, keeper) over the updated state}
-    """
-    from graphlab_spark.operators.scratch import materialize
 
+    An index whose ``vecs`` exist but cannot be read raises here; it is
+    never treated as absent (which would rebuild it from the increment).
+    """
     new_vecs = materialize(
         new_embeddings.join(
             assign_cells(new_embeddings, centroids), "vec_id"
@@ -90,7 +84,7 @@ def apply_increment(
     if new_vecs.select("vec_id").distinct().count() != n_rows:
         raise ValueError("increment contains duplicate vec_ids")
 
-    if _table_exists(spark, f"{index_dir}/vecs"):
+    if table_exists(spark, f"{index_dir}/vecs"):
         old_vecs = spark.read.parquet(f"{index_dir}/vecs")
         old_pairs = spark.read.parquet(f"{index_dir}/pairs")
         if new_vecs.join(old_vecs, "vec_id", "left_semi").limit(1).count():
@@ -143,18 +137,15 @@ def semdedup_increment(
     materialized result frames. On Iceberg both writes are appends of
     increment-sized frames; the sandbox parquet emulation rewrites —
     the same documented posture as ``dedup_incremental``."""
-    from graphlab_spark.operators.scratch import materialize
-
     res = apply_increment(spark, index_dir, new_embeddings, centroids, tau)
-    out = {
-        "new_pairs": materialize(res["new_pairs"], "semdedup_inc_newpairs"),
-        "vecs": materialize(res["vecs"], "semdedup_inc_allvecs"),
-        "pairs": materialize(res["pairs"], "semdedup_inc_allpairs"),
-    }
-    out["vecs"].write.mode("overwrite").parquet(f"{index_dir}/vecs")
-    out["pairs"].write.mode("overwrite").parquet(f"{index_dir}/pairs")
-    out["retention"] = retention_frame(
-        spark.read.parquet(f"{index_dir}/vecs"),
-        spark.read.parquet(f"{index_dir}/pairs"),
+    out = {"new_pairs": materialize(res["new_pairs"], "semdedup_inc_newpairs")}
+    # pairs first: its plan scores against the old vecs, while the vecs
+    # plan reads only the old vecs and the pinned increment
+    out["pairs"] = replace_table(
+        res["pairs"], f"{index_dir}/pairs", "semdedup_inc_allpairs"
     )
+    out["vecs"] = replace_table(
+        res["vecs"], f"{index_dir}/vecs", "semdedup_inc_allvecs"
+    )
+    out["retention"] = retention_frame(out["vecs"], out["pairs"])
     return out

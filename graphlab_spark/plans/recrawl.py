@@ -27,14 +27,17 @@ idempotent at the same crawl id.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from graphlab_spark.operators.crawldiff import graph_delta, graph_delta_summary
 from graphlab_spark.operators.materialize import apply_graph_delta
 from graphlab_spark.operators.scd import scd2_apply, scd2_init
+from graphlab_spark.operators.scratch import (
+    cleanup_prefix,
+    materialize,
+    replace_table,
+    table_exists,
+)
 
 
 def recrawl_publish(
@@ -63,17 +66,14 @@ def recrawl_publish(
     snap_edges = edges.select(*ek, edge_weight)
     snap_nodes = nodes.select(node_key, *na)
 
-    first = not os.path.exists(f"{edges_path}/_SUCCESS")
-    if first:
+    if not table_exists(spark, edges_path):
         snap_edges.write.mode("overwrite").parquet(edges_path)
-        published = spark.read.parquet(edges_path)
+        published = spark.read.schema(snap_edges.schema).parquet(edges_path)
         delta = graph_delta(
             published.limit(0), snap_edges, keys=edge_keys, weight=edge_weight
         )
         history = scd2_init(snap_nodes, [node_key], na, crawl_id)
     else:
-        from graphlab_spark.operators.scratch import materialize
-
         published = spark.read.parquet(edges_path)
         # PIN the delta before applying it: apply_graph_delta rewrites
         # the published table the lazy delta plan reads, so an unpinned
@@ -88,16 +88,11 @@ def recrawl_publish(
         history = scd2_apply(
             spark.read.parquet(hist_path), snap_nodes, [node_key], na, crawl_id
         )
-    summary = graph_delta_summary(delta)
-    # history rewrites via scratch so the read+overwrite never races
-    from graphlab_spark.operators.scratch import cleanup_prefix, materialize
-
-    pinned = materialize(history, f"recrawl_hist_{crawl_id}")
-    pinned.write.mode("overwrite").parquet(hist_path)
+    history = replace_table(history, hist_path, f"recrawl_hist_{crawl_id}")
     cleanup_prefix(f"recrawl_hist_{crawl_id}")
     return {
-        "edges": spark.read.parquet(edges_path),
+        "edges": published,
         "delta": delta,
-        "summary": summary,
-        "history": spark.read.parquet(hist_path),
+        "summary": graph_delta_summary(delta),
+        "history": history,
     }

@@ -19,8 +19,8 @@ resumable commit per batch:
 4. **marker**  — record the batch as applied under
    ``{checkpoint_dir}/applied_batches/{batch_id}``, then drop staging.
 
-All filesystem checks go through the Hadoop FS API (same as
-``materialize._table_exists``) so the protocol works when
+All filesystem checks go through the Hadoop FS API (``scratch._FS``,
+the wrapper behind ``scratch.table_exists``) so the protocol works when
 ``checkpoint_dir``/``out_dir`` are on HDFS/S3A, not just local disk —
 driver-local ``os.path`` calls would silently disable replay gating
 there. Staging is keyed by ``ctag`` — a hash of a NONCE created inside
@@ -41,34 +41,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-class _FS:
-    """Thin Hadoop-FS wrapper (works for file://, hdfs://, s3a://...)."""
-
-    def __init__(self, spark: SparkSession, any_path: str):
-        jvm = spark.sparkContext._jvm
-        self._Path = jvm.org.apache.hadoop.fs.Path
-        self._fs = self._Path(any_path).getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
-
-    def exists(self, p: str) -> bool:
-        return bool(self._fs.exists(self._Path(p)))
-
-    def mkdirs(self, p: str) -> None:
-        self._fs.mkdirs(self._Path(p))
-
-    def delete(self, p: str) -> None:
-        self._fs.delete(self._Path(p), True)
-
-    def rename(self, src: str, dst: str) -> bool:
-        return bool(self._fs.rename(self._Path(src), self._Path(dst)))
-
-    def list_names(self, p: str) -> list[str]:
-        """Child entry names of directory ``p`` ([] if it doesn't exist)."""
-        if not self.exists(p):
-            return []
-        return [s.getPath().getName() for s in self._fs.listStatus(self._Path(p))]
+from graphlab_spark.operators.scratch import _FS
 
 
 class BatchCommitter:

@@ -28,3 +28,24 @@ def test_missing_output_recomputes(spark, tmp_path):
     r2 = run_stage(spark, manifest, "r", "extract", pages, "url", fn, f"{out}/docs")
     assert r2.count() == 50
     assert r2.filter(F.col("text") == "Hi there.").count() == 50
+
+
+def test_missing_global_outputs_recompute(spark, tmp_path):
+    """The global stages' half of the same contract: ``links`` and
+    ``edges`` deleted after a cold run_pipeline are recomputed on the
+    re-run, and the graph equals the cold one."""
+    from graphlab_spark.plans.pipeline import run_pipeline
+    from graphlab_spark.sources import corpus
+
+    pages = corpus.generate_pages(spark, 60)
+    aliases = corpus.alias_df(spark)
+    out = str(tmp_path / "kg")
+    tables = ("links", "entity_map", "nodes", "edges")
+
+    def graph(res):
+        return {t: sorted(map(repr, map(tuple, res[t].collect()))) for t in tables}
+
+    cold = graph(run_pipeline(spark, pages, aliases, out))
+    for t in ("links", "edges"):
+        shutil.rmtree(f"{out}/{t}")
+    assert graph(run_pipeline(spark, pages, aliases, out)) == cold
