@@ -9,8 +9,9 @@ entity canonicalization through the kg_upsert flow
 canonicalization to merge duplicate entities").
 
 Scale design:
-- MinHash-LSH is Spark ML ``MinHashLSH`` (seeded → deterministic) over
-  ``HashingTF`` char-3-gram vectors; ``approxSimilarityJoin`` is a
+- MinHash-LSH is the document-dedup operator's banded kernel
+  (``dedup.bands_frame`` → ``band_candidates`` → ``jaccard_verify``) over
+  char-3-gram sets signed with the seeded 61-bit string family: a
   band-bucket shuffle join, never a cross join.
 - Connected components is min-label propagation over DataFrame joins —
   components here are tiny variant clusters (diameter ≤ ~3), so the loop
@@ -54,13 +55,20 @@ def similarity_pairs(
 ) -> DataFrame:
     """items(id, text) → undirected near-dup pairs (a, b, jdist).
 
-    Banded MinHash over char-3-gram sets (same signature machinery as the
-    document dedup operator — one code path), candidates verified with
-    EXACT Jaccard so output is deterministic given the fixed hash seed.
-    The band-bucket join is the only shuffle; never a cross join. At
-    J = 0.72 the 16×4 band layout has candidate recall ≈ 0.993.
+    Banded MinHash over char-3-gram sets: the document dedup operator's
+    banding, band self-join and Jaccard verify, over signatures of the
+    61-bit string family (``dedup.minhash_udf``; documents use the
+    31-bit prehashed one) — kg_c10's golden canonical edges pin it.
+    Candidates are verified with EXACT Jaccard, so output is
+    deterministic given the fixed hash seed. At J = 0.72 the 16×4 band
+    layout has candidate recall ≈ 0.993.
     """
-    from graphlab_spark.operators.dedup import N_BANDS, N_HASHES, minhash_udf
+    from graphlab_spark.operators.dedup import (
+        band_candidates,
+        bands_frame,
+        jaccard_verify,
+        minhash_udf,
+    )
     from graphlab_spark.operators.scratch import materialize
 
     feat = items.select(
@@ -68,32 +76,10 @@ def similarity_pairs(
         grams_udf(F.col(text_col)).alias("grams"),
     ).filter(F.size("grams") > 0)
     sigs = materialize(feat.withColumn("sig", minhash_udf(F.col("grams"))), "canon_sigs")
-    rows_per_band = N_HASHES // N_BANDS
-    bands = sigs.select(
-        "item_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {N_BANDS - 1}), "
-                f"b -> struct(b AS band, concat_ws(',', transform(slice(sig, "
-                f"b * {rows_per_band} + 1, {rows_per_band}), x -> cast(x AS string))) AS bucket))"
-            )
-        ).alias("bb"),
-    ).select("item_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), ["band", "bucket"])
-        .filter(F.col("x.item_id") < F.col("y.item_id"))
-        .select(F.col("x.item_id").alias("a"), F.col("y.item_id").alias("b"))
-        .distinct()
-    )
-    g = sigs.select("item_id", "grams")
+    cand = band_candidates(bands_frame(sigs, "item_id"), "item_id")
     return (
-        cand.join(g.select(F.col("item_id").alias("a"), F.col("grams").alias("ga")), "a")
-        .join(g.select(F.col("item_id").alias("b"), F.col("grams").alias("gb")), "b")
-        .withColumn(
-            "jdist",
-            1 - F.size(F.array_intersect("ga", "gb")) / F.size(F.array_union("ga", "gb")),
-        )
+        jaccard_verify(cand, sigs, "item_id", "grams")
+        .withColumn("jdist", 1 - F.col("_j"))
         .filter(F.col("jdist") <= jaccard_dist)
         .select("a", "b", "jdist")
     )

@@ -248,13 +248,14 @@ def minhash_hashes_udf(hashes: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def bands_frame(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) from a signature frame — the LSH blocking
-    key. Shared by the one-shot pair finder and the incremental index
-    (operators/dedup_incremental.py)."""
+def bands_frame(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band, bucket) from a signature frame (id, sig) — the LSH
+    blocking key. Its three callers: :func:`minhash_lsh_pairs`,
+    ``dedup_incremental.apply_increment`` (and the index it persists)
+    and ``canonicalize.similarity_pairs`` (``id_col="item_id"``)."""
     rows_per_band = N_HASHES // N_BANDS
     return sigs.select(
-        "doc_id",
+        id_col,
         F.explode(
             F.expr(
                 f"transform(sequence(0, {N_BANDS - 1}), "
@@ -262,7 +263,48 @@ def bands_frame(sigs: DataFrame) -> DataFrame:
                 f"b * {rows_per_band} + 1, {rows_per_band}), x -> cast(x AS string))) AS bucket))"
             )
         ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
+def band_candidates(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Distinct candidate pairs (a, b), a < b, of ids sharing any (band,
+    bucket): the band self-join. Shuffles on the blocking key — bounded
+    fan-out, never a cross join."""
+    return (
+        bands.alias("x")
+        .join(bands.alias("y"), ["band", "bucket"])
+        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+        .select(F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b"))
+        .distinct()
+    )
+
+
+def jaccard_verify(
+    cand: DataFrame, sets: DataFrame, id_col: str = "doc_id", set_col: str = "shl"
+) -> DataFrame:
+    """(a, b, _j): candidate pairs joined to both sides' set columns,
+    ``_j`` the raw set Jaccard |∩|/|∪|. Callers apply their own
+    threshold to the unrounded ratio."""
+    return (
+        cand.join(sets.select(F.col(id_col).alias("a"), F.col(set_col).alias("sh_a")), "a")
+        .join(sets.select(F.col(id_col).alias("b"), F.col(set_col).alias("sh_b")), "b")
+        .withColumn(
+            "_j",
+            F.size(F.array_intersect("sh_a", "sh_b"))
+            / F.size(F.array_union("sh_a", "sh_b")),
+        )
+    )
+
+
+def verified_doc_pairs(cand: DataFrame, sigs: DataFrame, threshold: float) -> DataFrame:
+    """Document pairs (a, b, jaccard) of ``cand`` whose prehashed shingle
+    sets reach ``threshold``: unrounded filter, same as the exact tier;
+    rounded output column."""
+    return (
+        jaccard_verify(cand, sigs)
+        .filter(F.col("_j") >= threshold)
+        .select("a", "b", F.round("_j", 4).alias("jaccard"))
+    )
 
 
 def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
@@ -289,26 +331,7 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
         .withColumn("sig", minhash_hashes_udf("shl")),
         "minhash_sigs",
     )
-    bands = bands_frame(sigs)
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), ["band", "bucket"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .distinct()
-    )
-    verified = (
-        cand.join(sigs.select(F.col("doc_id").alias("a"), F.col("shl").alias("sh_a")), "a")
-        .join(sigs.select(F.col("doc_id").alias("b"), F.col("shl").alias("sh_b")), "b")
-        .withColumn(
-            "_j",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("_j") >= threshold)  # unrounded, same as the exact tier
-        .select("a", "b", F.round("_j", 4).alias("jaccard"))
-    )
-    return verified
+    return verified_doc_pairs(band_candidates(bands_frame(sigs)), sigs, threshold)
 
 
 # ---------------------------------------------------------------- SimHash

@@ -40,10 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphlab_spark.operators.dedup import (
+    band_candidates,
     bands_frame,
     minhash_hashes_udf,
     prehashed_col,
     shingled,
+    verified_doc_pairs,
 )
 from graphlab_spark.operators.scratch import (
     _FS,
@@ -76,14 +78,14 @@ def stamp_sig_family(spark: SparkSession, index_dir: str) -> None:
 def _check_sig_family(spark: SparkSession, index_dir: str, old_sigs: DataFrame) -> None:
     """Refuse to dedup against an index signed with a different
     permutation family. Tagged index: one driver-side FS existence
-    check, no job. Untagged (pre-tag or crash-before-stamp) index:
-    sample a few signatures — the legacy 61-bit family's values exceed
-    2^31 with overwhelming probability (best-effort: a run of all-empty
-    docs yields all-zero sigs the probe cannot classify)."""
+    check, no job. Untagged (pre-tag or crash-before-stamp) index: look
+    for any signature value ≥ 2^31 — the legacy 61-bit family's values
+    exceed it with overwhelming probability, the current family's never
+    do. The scan stops at the first hit; empty documents' all-zero
+    signatures fit both families and cannot hide one."""
     if table_exists(spark, _family_marker(index_dir)):
         return
-    rows = old_sigs.select("sig").head(8)
-    if any(v >= (1 << 31) for r in rows for v in (r["sig"] or [])):
+    if old_sigs.filter(F.exists("sig", lambda x: x >= (1 << 31))).limit(1).collect():
         raise ValueError(
             f"index at {index_dir!r} was built with a different minhash "
             f"permutation family (pre-{SIG_FAMILY} signatures detected); "
@@ -107,23 +109,6 @@ def sig_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-def _verify(cand: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame, threshold: float) -> DataFrame:
-    """Exact-Jaccard verification of candidate (a, b) pairs against the
-    prehashed shingle sets; unrounded threshold filter (same discipline
-    as the one-shot tier), rounded output column."""
-    return (
-        cand.join(sigs_a.select(F.col("doc_id").alias("a"), F.col("shl").alias("sh_a")), "a")
-        .join(sigs_b.select(F.col("doc_id").alias("b"), F.col("shl").alias("sh_b")), "b")
-        .withColumn(
-            "_j",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("_j") >= threshold)
-        .select("a", "b", F.round("_j", 4).alias("jaccard"))
-    )
-
-
 def apply_increment(
     spark: SparkSession,
     index_dir: str,
@@ -140,9 +125,11 @@ def apply_increment(
          "sigs":      full updated sigs frame  (existing ∪ new),
          "bands":     full updated bands frame (existing ∪ new)}
 
-    ``pairs`` always orders (a, b) with a < b. Candidates against the
-    index come from one join on (band, bucket) — the increment side is
-    small, so AQE broadcasts it against the bucketed index.
+    ``pairs`` always orders (a, b) with a < b. The increment's own
+    candidates come from the one-shot band self-join; candidates against
+    the index come from one join on (band, bucket) — the increment side
+    is small, so AQE broadcasts it against the bucketed index. Both
+    verify with the one-shot tier's :func:`verified_doc_pairs`.
     """
     new_sigs = materialize(sig_frame(new_docs), scratch_name)
     new_bands = bands_frame(new_sigs)
@@ -156,6 +143,8 @@ def apply_increment(
     # instead of three separate jobs (r6). The join keeps the same
     # scale shape the old semi-probe had: the increment side is small,
     # the index side is only its id column, and AQE picks the strategy.
+    # The clash is checked first: a duplicated index id fans the join
+    # out, which would otherwise read as a duplicate in the increment.
     have_index = table_exists(spark, f"{index_dir}/sigs")
     probe = new_sigs.select("doc_id")
     if have_index:
@@ -175,16 +164,21 @@ def apply_increment(
         F.count_distinct("doc_id").alias("d"),
         F.count("_hit").alias("clash"),
     ).head()
+    if guard["clash"]:
+        raise ValueError(
+            "increment contains doc_ids already in the index at "
+            f"{index_dir!r}; re-ingestion needs a delete+rebuild or "
+            "latest-wins upsert, not an append"
+        )
     if guard["d"] != guard["n"]:
         raise ValueError("increment contains duplicate doc_ids")
+    cand = band_candidates(new_bands)
     if have_index:
-        if guard["clash"]:
-            raise ValueError(
-                "increment contains doc_ids already in the index at "
-                f"{index_dir!r}; re-ingestion needs a delete+rebuild or "
-                "latest-wins upsert, not an append"
-            )
-        cand_cross = (
+        # plain union: self-pairs (both ids new) and cross-pairs (exactly
+        # one id old — the clash guard above enforces new ∩ index = ∅)
+        # are DISJOINT sets, each already distinct, so an outer
+        # .distinct() would be a no-op costing one full exchange (r6)
+        cand = cand.unionByName(
             new_bands.alias("n")
             .join(old_bands.alias("o"), ["band", "bucket"])
             .select(
@@ -196,27 +190,9 @@ def apply_increment(
         )
         all_sigs = old_sigs.unionByName(new_sigs)
     else:
-        cand_cross = None
         all_sigs = new_sigs
-
-    cand_self = (
-        new_bands.alias("x")
-        .join(new_bands.alias("y"), ["band", "bucket"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .distinct()
-    )
-    # plain union: self-pairs (both ids new) and cross-pairs (exactly
-    # one id old — the clash guard above enforces new ∩ index = ∅) are
-    # DISJOINT sets, each already distinct, so the old outer .distinct()
-    # was a no-op costing one full exchange of the candidate set (r6)
-    cand = (
-        cand_self if cand_cross is None
-        else cand_self.unionByName(cand_cross)
-    )
-    pairs = _verify(cand, all_sigs, all_sigs, threshold)
     return {
-        "pairs": pairs,
+        "pairs": verified_doc_pairs(cand, all_sigs, threshold),
         "new_sigs": new_sigs,
         "new_bands": new_bands,
         "sigs": all_sigs,
@@ -298,8 +274,8 @@ def start_dedup_stream(
             )
             # stamp AFTER the commit promotes: idempotent; a crash
             # before this leaves an untagged new-family index, which
-            # the head-probe fallback classifies correctly (31-bit
-            # values), and the next successful batch stamps it
+            # the signature probe classifies correctly (31-bit values),
+            # and the next successful batch stamps it
             stamp_sig_family(spark, index_dir)
         finally:
             cleanup_prefix(btag)  # per-batch scratch, fully consumed by staging

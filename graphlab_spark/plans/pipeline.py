@@ -71,7 +71,7 @@ from graphlab_spark.operators.parse import (
     surfaces_view,
     triples_view,
 )
-from graphlab_spark.operators.scratch import _FS, local_frame, materialize as _pin
+from graphlab_spark.operators.scratch import _FS, local_frame, materialize as _pin, table_exists
 from graphlab_spark.functions.slug import slugify, slugify_udf
 from graphlab_spark.operators.linking import norm_key_udf
 
@@ -95,7 +95,11 @@ def _read_output(spark: SparkSession, path: str) -> DataFrame | None:
     None when it is missing or unreadable (external deletion, a partial
     commit): the stage then recomputes instead of trusting its manifest
     rows. Callers reuse this one read as the readability probe, the
-    schema-drift reference and the resumed result."""
+    schema-drift reference and the resumed result. A missing output is
+    found by a driver-side existence check: probing it with a read makes
+    Spark log a ``FileNotFoundException`` trace on every cold run."""
+    if not table_exists(spark, path):
+        return None
     try:
         return spark.read.parquet(path)
     except Exception:

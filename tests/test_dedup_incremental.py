@@ -10,13 +10,15 @@ from pyspark.sql import functions as F
 
 from graphlab_spark.operators import dedup as DD
 from graphlab_spark.operators.dedup_incremental import (
+    apply_increment,
     dedup_increment,
     start_dedup_stream,
 )
+from test_round2_fixes import _jobs_launched
 
 
-def _docs(spark, sf="/root/testdata/sf0.01"):
-    d = spark.read.parquet(f"{sf}/documents.parquet").filter(F.col("doc_id") < 500)
+def _docs(spark, n=500, sf="/root/testdata/sf0.01"):
+    d = spark.read.parquet(f"{sf}/documents.parquet").filter(F.col("doc_id") < n)
     return DD.with_planted_near_dups(d)
 
 
@@ -86,6 +88,12 @@ def test_reingested_id_is_rejected(spark, tmp_path):
     dedup_increment(spark, idx, docs.filter(F.col("doc_id") < 100))
     with pytest.raises(ValueError, match="already in the index"):
         dedup_increment(spark, idx, docs.filter(F.col("doc_id") < 50))
+    # a forged duplicate index row fans out the guard's id join; the
+    # error must still blame the index clash, not the increment
+    dup = spark.read.parquet(f"{idx}/sigs").filter(F.col("doc_id") == 0).collect()
+    spark.createDataFrame(dup).write.mode("append").parquet(f"{idx}/sigs")
+    with pytest.raises(ValueError, match="already in the index"):
+        dedup_increment(spark, idx, docs.filter(F.col("doc_id") < 50))
 
 
 def test_legacy_family_index_refused(spark, tmp_path):
@@ -104,7 +112,6 @@ def test_legacy_family_index_refused(spark, tmp_path):
     )
 
     docs = _docs(spark).filter(F.col("doc_id") < 60)
-    idx = str(tmp_path / "idx")
 
     # forge a LEGACY index: same layout, signatures from the old 61-bit
     # family (values routinely >= 2^31), no family marker
@@ -112,12 +119,20 @@ def test_legacy_family_index_refused(spark, tmp_path):
         "sig",
         F.expr("transform(sig, x -> x + 4294967296)"),  # push into 61-bit range
     )
-    legacy.write.mode("overwrite").parquet(f"{idx}/sigs")
-    DD.bands_frame(legacy).write.mode("overwrite").parquet(f"{idx}/bands")
-
+    # the same index led by 8 empty-document rows, whose all-zero
+    # signatures fit either family: one file, sorted so they come first
+    empties = spark.range(8).select(
+        (F.col("id") - 8).alias("doc_id"),
+        F.expr("cast(array() AS array<bigint>)").alias("shl"),
+        F.expr("array_repeat(cast(0 AS bigint), 64)").alias("sig"),
+    )
     inc = docs.filter(F.col("doc_id") >= 40)
-    with pytest.raises(ValueError, match="permutation family"):
-        apply_increment(spark, idx, inc)
+    for name, sigs in (("idx", legacy), ("idx_empty_first", empties.unionByName(legacy))):
+        idx = str(tmp_path / name)
+        sigs.repartition(1).sortWithinPartitions("doc_id").write.parquet(f"{idx}/sigs")
+        DD.bands_frame(sigs).write.parquet(f"{idx}/bands")
+        with pytest.raises(ValueError, match="permutation family"):
+            apply_increment(spark, idx, inc)
 
     # a CURRENT-family index (written by dedup_increment, which stamps
     # the marker) keeps working — and so does one whose marker is
@@ -126,3 +141,34 @@ def test_legacy_family_index_refused(spark, tmp_path):
     dedup_increment(spark, idx2, docs.filter(F.col("doc_id") < 40))
     pairs = apply_increment(spark, idx2, inc)["pairs"]
     assert pairs.count() >= 0  # no refusal
+
+
+# Jobs of one incremental call against a small stamped index (40 indexed
+# documents, an increment of 26) and of one one-shot call over the same
+# 66 documents: the signature pin's write, then the pairs collect (plus
+# the guard aggregate for the increment). A hidden extra action on the
+# signatures moves them.
+APPLY_INCREMENT_JOB_BUDGET = 14
+MINHASH_PAIRS_JOB_BUDGET = 6
+
+
+def test_lsh_kernel_job_budget(spark, tmp_path):
+    docs = _docs(spark, 60)
+    idx = str(tmp_path / "idx")
+    dedup_increment(spark, idx, docs.filter(F.col("doc_id") < 40))
+    inc = docs.filter(F.col("doc_id") >= 40)
+    out = {}
+    jobs = (
+        _jobs_launched(
+            spark, "test_apply_increment_jobs",
+            lambda: out.update(inc=apply_increment(spark, idx, inc)["pairs"].collect()),
+        ),
+        _jobs_launched(
+            spark, "test_minhash_pairs_jobs",
+            lambda: out.update(oneshot=DD.minhash_lsh_pairs(docs, 0.8).collect()),
+        ),
+    )
+    assert out["inc"] and {(r.a, r.b) for r in out["inc"]} <= {
+        (r.a, r.b) for r in out["oneshot"]
+    }
+    assert jobs == (APPLY_INCREMENT_JOB_BUDGET, MINHASH_PAIRS_JOB_BUDGET)

@@ -49,3 +49,17 @@ def test_missing_global_outputs_recompute(spark, tmp_path):
     for t in ("links", "edges"):
         shutil.rmtree(f"{out}/{t}")
     assert graph(run_pipeline(spark, pages, aliases, out)) == cold
+
+
+def test_read_output_of_a_missing_stage_reads_nothing(spark, tmp_path, monkeypatch):
+    """A cold run's probe of a stage output that does not exist yet is a
+    driver-side existence check: no parquet read, so Spark logs no
+    ``FileNotFoundException`` trace before the stage recomputes."""
+    from pyspark.sql import DataFrameReader
+
+    from graphlab_spark.plans.pipeline import _read_output
+
+    calls = []
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, *p, **kw: calls.append(p))
+    assert _read_output(spark, str(tmp_path / "parsed")) is None
+    assert calls == []

@@ -6,9 +6,14 @@ Usage, from the root of the tree whose plans you want::
 
 Writes ``<out>/<name>_<suffix>.txt`` per name. Names are registry
 entries (by registry name), the bench operator paths built the way
-bench.py builds them (dedup_minhash, ann_ivf, ...) and ``kg_edges``:
+bench.py builds them (dedup_minhash, ann_ivf, ...), ``kg_edges``:
 the ``edges`` frame of ``run_pipeline_in_memory`` over kg_build's
-10,000 heavy pages. For a before/after pair, run the same command in a
+10,000 heavy pages, ``dedup_inc``: corpus_ops' ``apply_increment`` pairs
+(the planted corpus outside one 10% slice indexed into a temporary
+directory, that slice as the increment) and ``canon_pairs``:
+``similarity_pairs`` over the alias dictionary's surfaces, shaped as
+``canonicalize_stage`` calls it. Scan and scratch paths differ per run;
+strip them with the ``#<id>`` expression ids before comparing. For a before/after pair, run the same command in a
 checkout of the parent commit (``--suffix before``) and in this tree
 (``--suffix after``); copy this script into the parent checkout if it
 predates it. Workers import the package from the working directory, so
@@ -63,6 +68,31 @@ def build(spark, name):
     fixdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
     )
+    if name == "dedup_inc":
+        import atexit
+        import shutil
+        import tempfile
+
+        from graphlab_spark.operators.dedup_incremental import (
+            apply_increment,
+            dedup_increment,
+        )
+
+        work = tempfile.mkdtemp(prefix="plan_dedup_inc_")
+        atexit.register(shutil.rmtree, work, True)
+        index_dir = os.path.join(work, "index")
+        in_slice = F.col("doc_id") % 10 == 0
+        dedup_increment(spark, index_dir, planted.filter(~in_slice))
+        return apply_increment(spark, index_dir, planted.filter(in_slice))["pairs"]
+    if name == "canon_pairs":
+        from graphlab_spark.operators.canonicalize import similarity_pairs
+        from graphlab_spark.sources import corpus
+
+        items = corpus.alias_df(spark).select(
+            F.concat_ws("|", "canonical_id", "alias").alias("entity_id"),
+            F.col("alias").alias("surface"),
+        )
+        return similarity_pairs(spark, items.repartition("entity_id"), id_col="entity_id")
     if name == "dedup_minhash":
         return DD.minhash_lsh_pairs(planted, 0.8)
     if name == "dedup_exact":
