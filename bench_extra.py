@@ -28,19 +28,6 @@ import os
 import subprocess
 import sys
 
-_TOOLS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-
-
-def hardware_control() -> float:
-    """Raw multiprocessing wall over the scaling_bench per-doc kernel at
-    the bench core count — measures the box, not Spark."""
-    if _TOOLS not in sys.path:
-        sys.path.insert(0, _TOOLS)
-    from scaling_bench import hardware_control as hc
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return hc(cpus, reps=1)
-
 
 def _result_line(stdout: str) -> dict:
     """The last JSON object in ``stdout`` that carries ``"metric"``: a
@@ -59,11 +46,15 @@ def _result_line(stdout: str) -> dict:
 def main() -> None:
     passes = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     here = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.join(here, "tools"))
+    from scaling_bench import hardware_control
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     mins: dict[str, float] = {}
     controls: list[float] = []
     totals: list[float] = []
     for _ in range(passes):
-        controls.append(round(hardware_control(), 2))
+        controls.append(round(hardware_control(cpus, reps=1), 2))
         out = subprocess.run(
             [sys.executable, os.path.join(here, "bench.py")],
             capture_output=True,

@@ -1,6 +1,6 @@
 """Approximate-nearest-neighbor search over the ``embeddings`` table.
 
-Two tiers:
+Three tiers:
 - brute-force cosine top-k — the exactness baseline. The query set is the
   SMALL side: broadcast it, compute dot products JVM-side with
   ``zip_with``/``aggregate`` (no Python in the loop), rank with a window.
@@ -9,6 +9,9 @@ Two tiers:
   key (deterministic hyperplanes), candidates = same-bucket rows in any
   of B hash tables, exact cosine re-rank of candidates only. The shuffle
   key is (table, bucket); no cross join anywhere.
+- IVF top-k — candidates = the rows of a query's probed centroid cells.
+  The float (here, ann_index.py) and IVF-PQ (ann_pq.py) searches share
+  this module's probe UDF, probed-cell read and candidate tail.
 
 Math is done in DOUBLE so scores agree bit-for-bit-enough with the
 DuckDB oracle after rounding.
@@ -21,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from graphlab_spark.operators.scratch import materialize, spread
 
 DIM = 64
 N_TABLES = 8
@@ -43,17 +48,41 @@ def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Shared ranking tail: rounded-score window rank, deterministic
-    neighbor-id tie-break → (query_id, neighbor_id, rank, score)."""
+def hoisted_cols(id_col: str, vec_col: str, side: str) -> list:
+    """(id, vec, norm) projections of one search side: ``side="q"`` gives
+    (query_id, qvec, _qn), ``"n"`` gives (neighbor_id, nvec, _nn)."""
+    ident = "query_id" if side == "q" else "neighbor_id"
+    v = F.col(vec_col)
+    return [F.col(id_col).alias(ident), v.alias(f"{side}vec"), _norm(v).alias(f"_{side}n")]
+
+
+def hoisted_cosine():
+    """Cosine of ``qvec`` and ``nvec`` from the per-side norms ``_qn`` and
+    ``_nn``. Hoisting sqrt(dot(v, v)) into per-side projections (r6)
+    evaluates it once per row instead of once per (query × corpus) pair;
+    the same expression over the same array yields the same double and
+    dot/(qn*nn) divides in the same order, so scores equal cosine_col's."""
+    return _dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn"))
+
+
+def top_rows(scored: DataFrame, k: int, rank_col: str = "rank") -> DataFrame:
+    """Rows ranked ``<= k`` per query_id by score DESC, neighbor_id ASC."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return scored.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
+
+
+def rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Shared ranking tail → (query_id, neighbor_id, rank, score). Rank by
+    the ROUNDED score: raw doubles differ across engines at ~1e-9 and
+    would flip near-tie orderings vs the oracle."""
+    return top_rows(scored, k).select("query_id", "neighbor_id", "rank", "score")
+
+
+def batch_matrix(vecs: pd.Series, dtype=np.float64) -> np.ndarray:
+    """One Arrow batch of arrays → an (n, d) ``dtype`` matrix."""
+    return np.stack(vecs.map(lambda v: np.asarray(v, dtype=dtype)).to_numpy())
 
 
 def cell_assign_udf(bc):
@@ -63,28 +92,74 @@ def cell_assign_udf(bc):
 
     @F.pandas_udf(T.IntegerType())
     def cell_udf(vecs: pd.Series) -> pd.Series:
-        M = np.stack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
-        return pd.Series(np.argmax(M @ bc.value.T, axis=1).astype(np.int32))
+        return pd.Series(np.argmax(batch_matrix(vecs) @ bc.value.T, axis=1).astype(np.int32))
 
     return cell_udf
 
 
-def probe_cells_udf(bc, n_probe: int):
-    """n_probe nearest cells per query vector. STABLE sort: ties resolve
-    to the lowest cell index, exactly like cell_assign_udf's argmax — so
-    a vector's own assigned cell is always probe[0] and the
-    exact-duplicate recall guarantee holds even for pathological vectors
-    tied with > n_probe centroids. This invariant couples the two UDFs;
-    that is WHY they live side by side here."""
+def probe_cells_udf(bc, n_probe: int, to_matrix=batch_matrix):
+    """n_probe nearest cells per query vector by ``to_matrix(vecs) @
+    centroids.T``: float64 for IVF, ann_pq's exact-int64 quantization for
+    IVF-PQ. STABLE sort: ties resolve to the lowest cell index, exactly
+    like the assignment argmax (cell_assign_udf, ann_pq's encode) — so a
+    vector's own assigned cell is always probe[0] and the exact-duplicate
+    recall guarantee holds even for vectors tied with > n_probe
+    centroids."""
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probes_udf(vecs: pd.Series) -> pd.Series:
-        M = np.stack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
-        sims = M @ bc.value.T
+        sims = to_matrix(vecs) @ bc.value.T
         order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
         return pd.Series([row.astype(int).tolist() for row in order])
 
     return probes_udf
+
+
+def probe_topk(
+    corpus: DataFrame, qprobes: DataFrame, score, k: int,
+    rank=rank_topk, exclude_self: bool = True, dedup: bool = False,
+) -> DataFrame:
+    """The IVF candidate tail: join ``corpus`` (neighbor_id, cell, ...)
+    with the broadcast ``qprobes`` (query_id, cell, ...) on ``cell``, drop
+    self-matches, round the caller's ``score`` column to 4 dp, then
+    ``rank(scored, k)``.
+
+    PRECONDITION: corpus ids are unique. Each corpus vector then sits in
+    exactly ONE cell and a query's probes are distinct cells, so a
+    (query, neighbor) pair matches at most once and the one-shot searches
+    skip ``dropDuplicates`` — a provable no-op costing a full exchange
+    (r6). It is not checked at run time, which would add a job to every
+    call. The persisted searches pass ``dedup=True`` (their docstrings
+    say why)."""
+    cand = corpus.join(F.broadcast(qprobes), "cell")
+    if exclude_self:
+        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
+    if dedup:
+        cand = cand.dropDuplicates(["query_id", "neighbor_id"])
+    return rank(cand.withColumn("score", F.round(score, 4)), k)
+
+
+def probed_cells(
+    spark: SparkSession, table: str, queries: DataFrame, probes,
+    query_id_col: str, query_vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The persisted searches' probed-cell read → (qprobes, cells).
+
+    The query probes are PINNED once, so the ``probes`` UDF and the query
+    source run once per search: the driver collects the distinct probe
+    cells (n_queries × n_probe, driver-small) from the pin, and they
+    become a static ``cell IN (...)`` partition filter on the
+    cell-partitioned ``table`` — un-probed cells are never read."""
+    qprobes = materialize(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(query_vec_col).alias("qvec"),
+            F.explode(probes(F.col(query_vec_col))).alias("cell"),
+        ),
+        "ivf_probes",
+    )
+    probe_cells = sorted({r.cell for r in qprobes.select("cell").distinct().collect()})
+    return qprobes, spark.read.parquet(table).filter(F.col("cell").isin(probe_cells))
 
 
 def brute_force_topk(
@@ -98,39 +173,17 @@ def brute_force_topk(
 
     → (query_id, neighbor_id, rank, score) with score rounded to 4 dp.
     """
-    # Norms are HOISTED into per-side projections (r6): sqrt(dot(v, v))
-    # is evaluated once per query row and once per corpus row instead of
-    # once per (query × corpus) pair inside cosine_col — the same
-    # expression over the same array yields the same double, and the
-    # final dot/(qn*nn) multiplies/divides in the same order, so scores
-    # are bit-identical while 2/3 of the per-pair aggregate loops (the
-    # two norms) leave the O(N·Q) hot loop. The corpus side is spread
-    # across the cores first: the O(N·Q) scoring loop is the cost
-    # centre and a single-row-group input would run it on one core.
-    from graphlab_spark.operators.scratch import spread
-
+    # The corpus side is spread across the cores first: the O(N·Q)
+    # scoring loop is the cost centre and a single-row-group input would
+    # run it on one core.
     embeddings = spread(embeddings)
     queries = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("_qn"),
+        *hoisted_cols(id_col, vec_col, "q")
     )
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("_nn"),
-    )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            F.round(
-                _dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")), 4
-            ),
-        )
-    )
-    # rank by the ROUNDED score: raw doubles differ across engines at ~1e-9
-    # and would flip near-tie orderings vs the oracle
+    corpus = embeddings.select(*hoisted_cols(id_col, vec_col, "n"))
+    scored = corpus.join(
+        F.broadcast(queries), F.col("query_id") != F.col("neighbor_id")
+    ).withColumn("score", F.round(hoisted_cosine(), 4))
     return rank_topk(scored, k)
 
 
@@ -147,7 +200,7 @@ def _planes(seed: int = 11) -> np.ndarray:
 def lsh_buckets_udf(vecs: pd.Series) -> pd.Series:
     """Sign-random-projection bucket per hash table, vectorized per batch."""
     P = _planes()
-    M = np.stack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())  # (n, d)
+    M = batch_matrix(vecs)  # (n, d)
     out = []
     # (n, T, B) sign bits → (n, T) integer bucket keys
     proj = np.einsum("nd,tbd->ntb", M, P) > 0
@@ -194,44 +247,19 @@ def ivf_topk(
     weaker neighbors follow the cell-overlap probability (pytest pins
     measured floors).
     """
-    spark = embeddings.sparkSession
-    C = _centroids(embeddings, n_centroids, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(C)
-
+    bc = embeddings.sparkSession.sparkContext.broadcast(
+        _centroids(embeddings, n_centroids, id_col, vec_col)
+    )
     # spread an under-parallel corpus before the per-row cell-assign UDF
-    from graphlab_spark.operators.scratch import spread
-
     embeddings = spread(embeddings)
-    # norms hoisted per side (bit-identical — see brute_force_topk)
     corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("_nn"),
-        cell_assign_udf(bc)(F.col(vec_col)).alias("cell"),
+        *hoisted_cols(id_col, vec_col, "n"), cell_assign_udf(bc)(F.col(vec_col)).alias("cell")
     )
-    qside = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            _norm(F.col(vec_col)).alias("_qn"),
-            F.explode(probe_cells_udf(bc, n_probe)(F.col(vec_col))).alias("cell"),
-        )
+    qside = embeddings.filter(F.col(id_col).isin(query_ids)).select(
+        *hoisted_cols(id_col, vec_col, "q"),
+        F.explode(probe_cells_udf(bc, n_probe)(F.col(vec_col))).alias("cell"),
     )
-    # No dropDuplicates: the corpus assigns each vector to exactly ONE
-    # cell and a query's probe list is distinct cells, so a
-    # (query, neighbor) pair can match at most once in this join — the
-    # dedup was a provable no-op costing a full exchange (r6; unlike
-    # lsh_topk, where the same id pair can collide in several tables).
-    cand = (
-        corpus.join(F.broadcast(qside), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    scored = cand.withColumn(
-        "score",
-        F.round(_dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")), 4),
-    )
-    return rank_topk(scored, k)
+    return probe_topk(corpus, qside, hoisted_cosine(), k)
 
 
 def lsh_topk(
@@ -243,13 +271,11 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: same-bucket candidates in any table, exact
     cosine re-rank. Recall < 1 by design; bounded candidate fan-out."""
-    from graphlab_spark.operators.scratch import spread
-
     embeddings = spread(embeddings)  # per-row bucket UDF is the cost centre
     base = embeddings.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("_n"),  # hoisted (bit-identical, r6)
+        _norm(F.col(vec_col)).alias("_n"),
         F.explode(lsh_buckets_udf(F.col(vec_col))).alias("tb"),
     ).select(
         "vid", "vec", "_n", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket")
@@ -261,6 +287,7 @@ def lsh_topk(
         "table",
         "bucket",
     )
+    # dropDuplicates: unlike IVF, one id pair can collide in several tables
     cand = (
         base.join(F.broadcast(qside), ["table", "bucket"])
         .filter(F.col("vid") != F.col("query_id"))
@@ -274,8 +301,4 @@ def lsh_topk(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn(
-        "score",
-        F.round(_dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")), 4),
-    )
-    return rank_topk(scored, k)
+    return rank_topk(cand.withColumn("score", F.round(hoisted_cosine(), 4)), k)

@@ -34,7 +34,8 @@ from graphlab_spark.operators.ann import (
     cell_assign_udf,
     cosine_col,
     probe_cells_udf,
-    rank_topk,
+    probe_topk,
+    probed_cells,
 )
 
 
@@ -57,14 +58,22 @@ def ivf_build(
         [(i, [float(x) for x in C[i]]) for i in range(C.shape[0])],
         "cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    bc = spark.sparkContext.broadcast(C)
+    _write_cells(embeddings, C, index_dir, "overwrite", id_col, vec_col)
+
+
+def _write_cells(
+    embeddings: DataFrame, C: np.ndarray, index_dir: str, mode: str, id_col: str, vec_col: str
+) -> None:
+    """Assign each vector its argmax cell under centroids ``C`` and write
+    the inverted file PARTITIONED BY cell."""
+    bc = embeddings.sparkSession.sparkContext.broadcast(C)
     (
         embeddings.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("nvec"),
             cell_assign_udf(bc)(F.col(vec_col)).alias("cell"),
         )
-        .write.mode("overwrite")
+        .write.mode(mode)
         .partitionBy("cell")
         .parquet(f"{index_dir}/cells")
     )
@@ -79,16 +88,8 @@ def ivf_add(
 ) -> None:
     """Append new vectors under the EXISTING centroids (no re-train) —
     the incremental path: only the touched cell partitions grow."""
-    bc = spark.sparkContext.broadcast(_load_centroids(spark, index_dir))
-    (
-        new_embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("nvec"),
-            cell_assign_udf(bc)(F.col(vec_col)).alias("cell"),
-        )
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/cells")
+    _write_cells(
+        new_embeddings, _load_centroids(spark, index_dir), index_dir, "append", id_col, vec_col
     )
 
 
@@ -112,31 +113,19 @@ def ivf_search(
     parity). It assumes query ids share the corpus id space: an EXTERNAL
     query whose id happens to collide with a corpus ``vec_id`` would
     silently lose that one legitimate neighbor — pass
-    ``exclude_self=False`` for external query frames."""
-    from graphlab_spark.operators.scratch import materialize
+    ``exclude_self=False`` for external query frames.
 
+    Unlike ``ivf_topk`` the candidates keep ``dropDuplicates``: the index
+    grows via ``ivf_add``, whose "ids are new" append contract is not
+    enforced by a clash guard, and a replayed add would leave duplicate
+    (neighbor_id, cell) rows that the dedup masks from top-k."""
     C = _load_centroids(spark, index_dir)
     bc = spark.sparkContext.broadcast(C)
-    n_probe = min(n_probe, C.shape[0])
-
-    # probe-cell assignment (ann.probe_cells_udf — same stable tie-break
-    # as the build-side assignment) is PINNED once: both the driver-side
-    # probe-cell collect and the candidate join read the pinned frame,
-    # so the UDF and the query source run exactly once per search.
-    qprobes = materialize(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-            F.explode(probe_cells_udf(bc, n_probe)(F.col(query_vec_col))).alias("cell"),
-        ),
-        "ivf_probes",
+    qprobes, cells = probed_cells(
+        spark, f"{index_dir}/cells", queries, probe_cells_udf(bc, min(n_probe, C.shape[0])),
+        query_id_col, query_vec_col,
     )
-    # driver-small: n_queries × n_probe distinct cell ids
-    probe_cells = sorted({r.cell for r in qprobes.select("cell").distinct().collect()})
-    cells = spark.read.parquet(f"{index_dir}/cells").filter(F.col("cell").isin(probe_cells))
-    cand = cells.join(F.broadcast(qprobes), "cell")
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-    cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    scored = cand.withColumn("score", F.round(cosine_col(F.col("qvec"), F.col("nvec")), 4))
-    return rank_topk(scored, k)
+    return probe_topk(
+        cells, qprobes, cosine_col(F.col("qvec"), F.col("nvec")), k,
+        exclude_self=exclude_self, dedup=True,
+    )

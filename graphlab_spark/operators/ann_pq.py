@@ -48,7 +48,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from graphlab_spark.operators.ann import cosine_col, rank_topk
+from graphlab_spark.operators.ann import (
+    batch_matrix,
+    cosine_col,
+    probe_cells_udf,
+    probe_topk,
+    probed_cells,
+    rank_topk,
+    top_rows,
+)
+from graphlab_spark.operators.scratch import spread
 
 SCALE = 100_000
 REPO_FIXTURES = os.path.join(
@@ -75,8 +84,13 @@ def load_pq_model(
 
 
 def _quantize_batch(vecs: pd.Series) -> np.ndarray:
-    V = np.stack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
-    return np.floor(V * SCALE + 0.5).astype(np.int64)
+    return np.floor(batch_matrix(vecs) * SCALE + 0.5).astype(np.int64)
+
+
+def _broadcast_model(spark: SparkSession, model: tuple[np.ndarray, np.ndarray]) -> tuple:
+    """(bc_cq, bc_cb): the frozen model, broadcast once per call and
+    shared by that call's encode, probe and score UDFs."""
+    return spark.sparkContext.broadcast(model[0]), spark.sparkContext.broadcast(model[1])
 
 
 def encode_udf(bc_cq, bc_cb):
@@ -114,20 +128,6 @@ def encode_udf(bc_cq, bc_cb):
     return enc
 
 
-def probe_udf(bc_cq, n_probe: int):
-    """n_probe nearest cells by exact-int64 dot, stable ties → lowest
-    cell (a vector's own cell is always probe[0])."""
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probes(vecs: pd.Series) -> pd.Series:
-        vq = _quantize_batch(vecs)
-        sims = vq @ bc_cq.value.T
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.astype(int).tolist() for row in order])
-
-    return probes
-
-
 def score_udf(bc_cq, bc_cb):
     """Asymmetric-distance scoring: reconstruct = centroid_q[cell] +
     concat(codebook[m, code_m]), score = cos(quantized query, recon).
@@ -139,7 +139,7 @@ def score_udf(bc_cq, bc_cb):
         m_n = CB.shape[0]
         qv = _quantize_batch(qvecs)  # (n, dim)
         cl = cells.to_numpy(dtype=np.int64)
-        cd = np.stack(codes.map(lambda c: np.asarray(c, dtype=np.int64)).to_numpy())
+        cd = batch_matrix(codes, np.int64)
         recon = CQ[cl] + CB[np.arange(m_n)[None, :], cd].reshape(len(cl), -1)
         num = (qv * recon).sum(axis=1)  # exact int64
         den = np.sqrt((qv * qv).sum(axis=1).astype(np.float64)) * np.sqrt(
@@ -159,18 +159,23 @@ def ivfpq_encode(
     """→ (neighbor_id, cell, codes): the compressed corpus — M small
     int codes/vector instead of 64 floats (16× vs float32 at M=16, the
     reason the index fits memory at 10^12 vectors)."""
-    from graphlab_spark.operators.scratch import spread
+    bcs = _broadcast_model(embeddings.sparkSession, model)
+    return _encoded(embeddings, bcs, id_col, vec_col)
 
-    spark = embeddings.sparkSession
-    bc_cq = spark.sparkContext.broadcast(model[0])
-    bc_cb = spark.sparkContext.broadcast(model[1])
+
+def _encoded(embeddings: DataFrame, bcs: tuple, id_col: str, vec_col: str) -> DataFrame:
     # the per-row encode UDF is the cost centre — spread an
     # under-parallel corpus scan across the cores (no-op at scale)
     embeddings = spread(embeddings)
     return embeddings.select(
         F.col(id_col).alias("neighbor_id"),
-        encode_udf(bc_cq, bc_cb)(F.col(vec_col)).alias("e"),
+        encode_udf(*bcs)(F.col(vec_col)).alias("e"),
     ).select("neighbor_id", F.col("e.cell").alias("cell"), F.col("e.codes").alias("codes"))
+
+
+def _pq_probes(bcs: tuple, n_probe: int):
+    """Probe UDF over the quantized query (exact-int64 dot)."""
+    return probe_cells_udf(bcs[0], n_probe, _quantize_batch)
 
 
 def _refine_topk(
@@ -185,16 +190,7 @@ def _refine_topk(
     (rounded PQ score DESC, neighbor_id ASC), then EXACT cosine over
     only the shortlisted full vectors — Q×refine point reads, never a
     corpus scan."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= refine)
-        .select("query_id", "qvec", "neighbor_id")
-    )
+    shortlist = top_rows(scored, refine, "_r").select("query_id", "qvec", "neighbor_id")
     full = embeddings.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
     )
@@ -202,6 +198,16 @@ def _refine_topk(
         "score", F.round(cosine_col(F.col("qvec"), F.col("nvec")), 4)
     )
     return rank_topk(exact, k)
+
+
+def _ranker(refine: int, embeddings: DataFrame | None, id_col: str, vec_col: str):
+    """rank_topk, or with ``refine`` the exact-cosine re-rank of the PQ
+    top-``refine`` over ``embeddings``."""
+    if not refine:
+        return rank_topk
+    if embeddings is None:
+        raise ValueError("refine requires refine_embeddings (the full-vector table)")
+    return lambda scored, k: _refine_topk(scored, embeddings, k, refine, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -221,31 +227,25 @@ def ivfpq_topk(
     ``refine=R`` re-ranks the PQ top-R with exact cosine (recall ≈
     uncompressed IVF, pinned in pytest)."""
     spark = embeddings.sparkSession
-    if model is None:
-        model = load_pq_model(spark)
-    bc_cq = spark.sparkContext.broadcast(model[0])
-    bc_cb = spark.sparkContext.broadcast(model[1])
-    enc = ivfpq_encode(embeddings, model, id_col, vec_col)
+    bcs = _broadcast_model(spark, model if model is not None else load_pq_model(spark))
     qside = embeddings.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
-        F.explode(probe_udf(bc_cq, n_probe)(F.col(vec_col))).alias("cell"),
+        F.explode(_pq_probes(bcs, n_probe)(F.col(vec_col))).alias("cell"),
     )
-    # no dropDuplicates: encode assigns each corpus vector exactly ONE
-    # cell and a query's probe list is distinct cells, so (query,
-    # neighbor) matches at most once — the dedup was a no-op exchange
-    # (r6, same proof as ann.ivf_topk)
-    cand = (
-        enc.join(F.broadcast(qside), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+    return probe_topk(
+        _encoded(embeddings, bcs, id_col, vec_col), qside, score_udf(*bcs)(F.col("qvec"), F.col("cell"), F.col("codes")), k,
+        rank=_ranker(refine, embeddings, id_col, vec_col),
     )
-    scored = cand.withColumn(
-        "score",
-        F.round(score_udf(bc_cq, bc_cb)(F.col("qvec"), F.col("cell"), F.col("codes")), 4),
-    )
-    if refine:
-        return _refine_topk(scored, embeddings, k, refine, id_col, vec_col)
-    return rank_topk(scored, k)
+
+
+def _write_codes(
+    embeddings: DataFrame, model: tuple, index_dir: str, mode: str, id_col: str, vec_col: str
+) -> None:
+    """Encode under the frozen ``model``; write the codes PARTITIONED BY cell."""
+    ivfpq_encode(embeddings, model, id_col, vec_col).write.mode(mode).partitionBy(
+        "cell"
+    ).parquet(f"{index_dir}/codes")
 
 
 def ivfpq_build(
@@ -260,9 +260,7 @@ def ivfpq_build(
     read only probed partitions) + the frozen model copied alongside so
     the index is self-contained."""
     model = load_pq_model(spark, model_dir)
-    ivfpq_encode(embeddings, model, id_col, vec_col).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{index_dir}/codes")
+    _write_codes(embeddings, model, index_dir, "overwrite", id_col, vec_col)
     src = model_dir or REPO_FIXTURES
     for part in ("pq_centroids.parquet", "pq_codebook.parquet"):
         spark.read.parquet(f"{src}/{part}").coalesce(1).write.mode("overwrite").parquet(
@@ -280,9 +278,7 @@ def ivfpq_add(
     """Append new vectors under the FROZEN model — only touched cell
     partitions grow; increments never retrain or rebuild."""
     model = load_pq_model(spark, index_dir)
-    ivfpq_encode(new_embeddings, model, id_col, vec_col).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{index_dir}/codes")
+    _write_codes(new_embeddings, model, index_dir, "append", id_col, vec_col)
 
 
 def ivfpq_search(
@@ -300,38 +296,21 @@ def ivfpq_search(
     """Search the persisted compressed index. Probe cells become a
     static ``cell IN (...)`` partition filter — un-probed cells are
     never read (plan-tested). Results are IDENTICAL to ivfpq_topk on
-    the same corpus/model (pinned by test)."""
-    from graphlab_spark.operators.scratch import materialize
+    the same corpus/model (pinned by test).
 
+    Unlike ivfpq_topk the candidates keep ``dropDuplicates``: the index
+    grows via ivfpq_add, whose "ids are new" append contract is not
+    enforced by a clash guard, and a replayed add would leave duplicate
+    (neighbor_id, cell) rows that the dedup masks from top-k."""
     model = load_pq_model(spark, index_dir)
-    bc_cq = spark.sparkContext.broadcast(model[0])
-    bc_cb = spark.sparkContext.broadcast(model[1])
+    bcs = _broadcast_model(spark, model)
     n_probe = min(n_probe, model[0].shape[0])
-    qprobes = materialize(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-            F.explode(probe_udf(bc_cq, n_probe)(F.col(query_vec_col))).alias("cell"),
-        ),
-        "ivfpq_probes",
+    qprobes, codes = probed_cells(
+        spark, f"{index_dir}/codes", queries, _pq_probes(bcs, n_probe),
+        query_id_col, query_vec_col,
     )
-    probe_cells = sorted({r.cell for r in qprobes.select("cell").distinct().collect()})
-    codes = spark.read.parquet(f"{index_dir}/codes").filter(F.col("cell").isin(probe_cells))
-    cand = codes.join(F.broadcast(qprobes), "cell")
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-    # KEEP dropDuplicates here (unlike ivfpq_topk): the persisted index
-    # grows via ivfpq_add, whose "ids are new" append contract is not
-    # enforced by a clash guard — a replayed add would leave duplicate
-    # (neighbor_id, cell) rows that this dedup masks from top-k, the
-    # conservative choice for the serving path (r6 self-review).
-    cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    scored = cand.withColumn(
-        "score",
-        F.round(score_udf(bc_cq, bc_cb)(F.col("qvec"), F.col("cell"), F.col("codes")), 4),
+    return probe_topk(
+        codes, qprobes, score_udf(*bcs)(F.col("qvec"), F.col("cell"), F.col("codes")), k,
+        rank=_ranker(refine, refine_embeddings, "vec_id", "embedding"),
+        exclude_self=exclude_self, dedup=True,
     )
-    if refine:
-        if refine_embeddings is None:
-            raise ValueError("refine requires refine_embeddings (the full-vector table)")
-        return _refine_topk(scored, refine_embeddings, k, refine, "vec_id", "embedding")
-    return rank_topk(scored, k)

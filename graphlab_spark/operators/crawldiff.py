@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STATUSES = ("added", "removed", "changed", "unchanged")
-
 
 def crawl_delta(
     old: DataFrame, new: DataFrame, key: str = "url", content: str = "text"

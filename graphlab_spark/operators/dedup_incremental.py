@@ -148,8 +148,10 @@ def apply_increment(
     have_index = table_exists(spark, f"{index_dir}/sigs")
     probe = new_sigs.select("doc_id")
     if have_index:
-        old_sigs = spark.read.parquet(f"{index_dir}/sigs")
-        old_bands = spark.read.parquet(f"{index_dir}/bands")
+        # the index rows share the increment's schemas: reading with them
+        # skips one schema-inference job per table
+        old_sigs = spark.read.schema(new_sigs.schema).parquet(f"{index_dir}/sigs")
+        old_bands = spark.read.schema(new_bands.schema).parquet(f"{index_dir}/bands")
         _check_sig_family(spark, index_dir, old_sigs)
         probe = probe.join(
             old_sigs.select("doc_id").withColumn("_hit", F.lit(1)),

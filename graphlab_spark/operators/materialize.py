@@ -426,23 +426,13 @@ def combined_frame(
     return updates.select(*keys, *value_cols)
 
 
-# Combiners that make incremental node/edge MERGEs exactly reproduce the
-# one-shot batch aggregation (build_nodes/build_edges over the full
-# input), given per-url dedup keeps each url in exactly one batch:
+# Combiners that make incremental edge MERGEs exactly reproduce the
+# one-shot batch aggregation (build_edges over the full input), given
+# per-url dedup keeps each url in exactly one batch:
 #  - counts and weights are sums of disjoint per-batch partials;
-#  - alias/evidence sets are unions (and the k smallest of a union is
+#  - evidence sets are unions (and the k smallest of a union is
 #    reachable from the per-side k smallest, so bounded evidence stays
-#    exact);
-#  - canonical_name / entity_type are running minima (min is
-#    associative).
-NODES_COMBINE = {
-    "aliases": lambda e, i: F.array_sort(F.array_union(e, i)),
-    "entity_type": F.least,
-    "n_mentions": lambda e, i: e + i,
-    "canonical_name": F.least,
-}
-
-
+#    exact).
 def edges_combine(max_evidence: int = 3) -> dict:
     return {
         "n_evidence": lambda e, i: e + i,

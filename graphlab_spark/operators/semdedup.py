@@ -39,8 +39,6 @@ from pyspark.sql import functions as F
 
 from graphlab_spark.operators.ann import cosine_col
 
-CENTROIDS_FIXTURE = "fixtures/semdedup_centroids.parquet"
-
 
 def train_centroids(
     vecs: np.ndarray, k: int = 8, n_iter: int = 10, seed: int = 7

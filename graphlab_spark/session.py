@@ -16,6 +16,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else a quarter of physical memory and
+    at least 1 GiB: a local-mode driver heap sized past the machine lets
+    one long-lived JVM grow until the host kills it."""
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1024, mem_mb // 4)}m")
+
+
 def get_spark(
     app_name: str = "graphlab_spark",
     master: str | None = None,
@@ -41,7 +49,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         .config("spark.python.worker.reuse", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # Sandbox filesystems make shuffle-block I/O expensive; tmpfs

@@ -143,3 +143,37 @@ def test_codes_are_m_small_ints(spark, embs):
     ).count()
     assert bad == 0
     assert enc.count() == embs.count()
+
+
+# Jobs of one single-query call over this fixture, counted through the
+# `.collect()`: the one-shot searches derive their cells in the same
+# plan as the candidate join, so a hidden extra action (a count of the
+# encoded corpus, say) moves them.
+IVF_TOPK_JOB_BUDGET = 6
+IVFPQ_REFINE_JOB_BUDGET = 5
+
+
+def test_single_query_job_budget(spark, embs):
+    from graphlab_spark.operators.ann import ivf_topk
+    from test_round2_fixes import _jobs_launched
+
+    model = load_pq_model(spark)
+    jobs = (
+        _jobs_launched(spark, "test_ivf_topk_jobs", lambda: ivf_topk(embs, [3]).collect()),
+        _jobs_launched(
+            spark, "test_ivfpq_topk_jobs",
+            lambda: ivfpq_topk(embs, [3], refine=50, model=model).collect(),
+        ),
+    )
+    assert jobs == (IVF_TOPK_JOB_BUDGET, IVFPQ_REFINE_JOB_BUDGET)
+
+
+def test_ivfpq_topk_broadcasts_the_model_once(spark, embs, monkeypatch):
+    """One call broadcasts the frozen model's two arrays once each; the
+    encode, probe and score UDFs share those broadcasts."""
+    sc = spark.sparkContext
+    real, calls = sc.broadcast, []
+    monkeypatch.setattr(sc, "broadcast", lambda v: calls.append(v) or real(v))
+    model = load_pq_model(spark)
+    ivfpq_topk(embs, [3], refine=50, model=model)
+    assert len(calls) == 2
