@@ -13,6 +13,10 @@ At 10^12-edge scale: bucket the edges table by ``src`` so hops are
 co-partitioned joins; the frontier stays tiny relative to the corpus, so
 Catalyst/AQE broadcast it — a 3-hop query touches only the reachable
 subgraph, never the full table.
+
+The PageRank family (plain, evidence-weighted, personalized and
+warm-start) is one engine: one pinned transition table, one power
+iteration run on the driver or distributed by graph size.
 """
 
 from __future__ import annotations
@@ -287,130 +291,27 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     return labels.select("id", F.col("lbl").alias("community"))
 
 
+# ------------------------------------------------------------- PageRank
+# The four PageRank operators differ only in what they hand to
+# _pagerank: the (src, dst, w) edges, the seed set and the prior ranks.
+# _pagerank pins one transition table and runs one power iteration over
+# it, on the driver (_power_kernel) or distributed (_power_loop).
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     n_iter: int = 20,
-    driver_max_nodes: int = 100_000,
     driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over the directed distinct edge set → (id, rank),
     normalized so ranks sum to 1. Dangling-node mass is redistributed
     uniformly each iteration (standard formulation — matches a dense
-    numpy power iteration, pinned by test_graph_query.py).
-
-    Iterative join-agg, the same loop discipline as connected
-    components (canonicalize.py): each iteration is one co-partitioned
-    join (ranks ⋈ out-degree edges) + one partial-aggregated shuffle on
-    dst, with the rank vector pinned to scratch parquet per iteration so
-    lineage stays flat. The rank frame is O(nodes) — orders of magnitude
-    smaller than the edge table at web scale; AQE broadcasts it while it
-    fits. Float note: cross-partition sum order varies, so outputs are
-    compared with tolerance (or rounded) — never hash-gated raw.
-
-    Size-adaptive (same posture as linking/canonicalize): a graph up to
-    ``driver_max_nodes`` nodes AND ``driver_max_edges`` distinct edges
-    runs the identical formulation as one driver numpy power iteration
-    (20 Spark jobs on a vocabulary-sized graph is all scheduler
-    overhead). Both bounds are checked BEFORE any collect — the node
-    bound alone would admit a dense graph whose edge set floods the
-    driver. The distributed loop takes over beyond either bound; its
-    per-iteration scratch is reclaimed as soon as the next iteration is
-    pinned (only the final rank vector survives the call). Path
-    equivalence to 1e-9 is pinned by test_graph_query.py.
-    """
-    import uuid
-
-    from graphlab_spark.operators.scratch import cleanup_prefix, materialize
-
-    tag = f"pr_{uuid.uuid4().hex[:8]}"  # scratch scoped to this call
-    e = edges.select("src", "dst").distinct()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    nodes = materialize(nodes, f"{tag}_nodes")
-    n = nodes.count()
-    if n == 0:
-        cleanup_prefix(tag)
-        return edges.sparkSession.createDataFrame([], "id string, rank double")
-    if n <= driver_max_nodes:
-        m = e.count()
-        if m <= driver_max_edges:
-            cleanup_prefix(tag)
-            pairs = [(r.src, r.dst) for r in e.collect()]
-            return e.sparkSession.createDataFrame(
-                _pagerank_driver(pairs, damping, n_iter), "id string, rank double"
-            )
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    # dangling node set is fixed for the whole run — pin it once; each
-    # iteration's dangling MASS is then a 1-row aggregate computed inside
-    # the same job as the rank update (broadcast nested-loop of a single
-    # row), so an N-iteration run has ZERO mid-loop driver syncs — on a
-    # real cluster every collect is a full-job barrier on the critical
-    # path (r2 verdict "what's wrong #3").
-    dangling_nodes = materialize(
-        nodes.join(out_deg.withColumnRenamed("src", "id"), "id", "left_anti"),
-        f"{tag}_dangling",
-    )
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(n_iter):
-        contribs = (
-            e.join(out_deg, "src")
-            .join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") / F.col("od")).alias("c"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        dangling_mass = F.broadcast(
-            ranks.join(dangling_nodes, "id", "left_semi").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-            )
-        )
-        ranks = materialize(
-            nodes.join(contribs, "id", "left")
-            .crossJoin(dangling_mass)
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("_dangling") / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-            ),
-            f"{tag}_iter_{i:04d}",
-        )
-        if i > 0:  # previous iteration's O(nodes) parquet is now dead
-            cleanup_prefix(f"{tag}_iter_{i - 1:04d}")
-    cleanup_prefix(f"{tag}_nodes")  # only the final rank vector survives
-    cleanup_prefix(f"{tag}_dangling")
-    return ranks
-
-
-def _pagerank_driver(
-    pairs: list[tuple[str, str]], damping: float, n_iter: int
-) -> list[tuple[str, float]]:
-    """Driver fast path: SPARSE vectorized power iteration (edge-index
-    arrays + bincount — O(E) per iteration, never a dense n×n), with the
-    IDENTICAL formulation as the distributed loop (uniform init,
-    per-iteration dangling-mass redistribution). Sorted ids so the
-    result is deterministic."""
-    import numpy as np
-
-    ids = sorted({s for s, _ in pairs} | {d for _, d in pairs})
-    pos = {v: i for i, v in enumerate(ids)}
-    n = len(ids)
-    src = np.fromiter((pos[s] for s, _ in pairs), dtype=np.int64, count=len(pairs))
-    dst = np.fromiter((pos[d] for _, d in pairs), dtype=np.int64, count=len(pairs))
-    out = np.bincount(src, minlength=n).astype(np.float64)
-    no_out = out == 0
-    r = np.full(n, 1.0 / n)
-    for _ in range(n_iter):
-        contrib = np.bincount(dst, weights=r[src] / out[src], minlength=n)
-        dangling = r[no_out].sum()
-        r = (1.0 - damping) / n + damping * dangling / n + damping * contrib
-    return [(v, float(r[pos[v]])) for v in ids]
+    numpy power iteration, pinned by test_graph_query.py). Float note:
+    cross-partition sum order varies, so outputs are compared with
+    tolerance (or rounded) — never hash-gated raw. Engine and size
+    switch: :func:`_pagerank`."""
+    return _pagerank(_unit_weights(edges), damping, n_iter, driver_max_edges)
 
 
 def weighted_pagerank(
@@ -418,7 +319,6 @@ def weighted_pagerank(
     weight_col: str = "n_docs",
     damping: float = 0.85,
     n_iter: int = 20,
-    driver_max_nodes: int = 100_000,
     driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """PageRank where each edge's transition probability is proportional
@@ -426,106 +326,304 @@ def weighted_pagerank(
     The KG-native ranking: edge weights carry EVIDENCE (``n_docs``
     supporting documents per canonical edge), so a fact attested by 40
     crawl pages pulls more rank than a one-off extraction. Duplicate
-    (src, dst) rows sum their weights; weights must be non-negative
-    (zero-total sources count as dangling).
-
-    Same engineering as :func:`pagerank` (it IS pagerank when every
-    weight is equal — pinned by test): size-adaptive driver fast path,
-    scratch-pinned distributed loop, dangling mass folded into the rank
-    update with zero mid-loop driver syncs. Float sums ⇒ compared with
-    tolerance, never hash-gated.
-    """
-    import uuid
-
-    from graphlab_spark.operators.scratch import cleanup_prefix, materialize
-
-    tag = f"wpr_{uuid.uuid4().hex[:8]}"
+    (src, dst) rows sum their weights, and pairs whose sum is not
+    positive are dropped, so a source with only zero-weight out-edges
+    dangles. It IS :func:`pagerank` when every weight is equal (pinned
+    by test)."""
     e = (
         edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
         .filter(F.col("w") > 0)
     )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
+    return _pagerank(e, damping, n_iter, driver_max_edges)
+
+
+def personalized_pagerank(
+    edges: DataFrame,
+    seeds: list[str],
+    damping: float = 0.85,
+    n_iter: int = 20,
+    driver_max_edges: int = 2_000_000,
+) -> DataFrame:
+    """Personalized PageRank from a seed set → (id, rank): the teleport
+    vector is uniform over ``seeds`` instead of all nodes, so rank mass
+    concentrates in the seeds' neighborhood — THE related-entities query
+    a KG serving tier answers ("more like these"). Dangling mass also
+    teleports to the seeds (standard formulation; ranks sum to 1).
+
+    Seeds are DEDUPED up front and the teleport vector is uniform over
+    the seeds PRESENT in the graph (absent seeds are dropped with the
+    mass renormalized over the rest; all seeds absent or an empty seed
+    list raises). Both paths share the same seed semantics.
+    """
+    if not seeds:
+        raise ValueError("personalized_pagerank requires a non-empty seed set")
+    return _pagerank(
+        _unit_weights(edges), damping, n_iter, driver_max_edges, seeds=sorted(set(seeds))
     )
-    nodes = materialize(nodes, f"{tag}_nodes")
-    n = nodes.count()
-    if n == 0:
+
+
+def pagerank_incremental(
+    edges: DataFrame,
+    prior_ranks: DataFrame,
+    damping: float = 0.85,
+    tol: float = 1e-10,
+    max_iter: int = 50,
+    check_every: int = 3,
+    driver_max_edges: int = 2_000_000,
+) -> DataFrame:
+    """Warm-start PageRank for the monthly re-crawl: iterate from the
+    PREVIOUS crawl's ranks instead of uniform, stopping at the L1
+    convergence tolerance — an unchanged graph converges at the first
+    delta check, and after an O(delta) edge change the cold-start
+    transient is skipped (strictly fewer iterations, pinned in
+    tests/test_graph_query.py; how much fewer depends on the graph's
+    mixing rate vs the tolerance — the tail to tol dominates on
+    well-mixed graphs).
+    The fixpoint is start-independent (power iteration on a primitive
+    chain), so warm output ≡ cold output within tolerance — this is an
+    ACCELERATION, never an approximation drift. Completes the
+    incremental family (dedup/semdedup/inverted-index/CC/graph-delta)
+    for the rank column a KG serves.
+
+    New nodes seed at 1/n; departed nodes drop; ranks renormalize to
+    sum 1 before iterating. The driver path checks the delta every
+    iteration (a check is free there); the distributed loop takes one
+    1-row delta job every ``check_every`` iterations (the
+    connected-components check cadence).
+    """
+    return _pagerank(
+        _unit_weights(edges),
+        damping,
+        max_iter,
+        driver_max_edges,
+        prior=prior_ranks,
+        tol=tol,
+        check_every=check_every,
+    )
+
+
+def _unit_weights(edges: DataFrame) -> DataFrame:
+    """The distinct directed pairs of ``edges``, each with weight 1."""
+    return edges.select("src", "dst").distinct().withColumn("w", F.lit(1.0))
+
+
+def _pagerank(
+    e: DataFrame,
+    damping: float,
+    n_iter: int,
+    driver_max_edges: int,
+    seeds: list[str] | None = None,
+    prior: DataFrame | None = None,
+    tol: float | None = None,
+    check_every: int = 1,
+) -> DataFrame:
+    """The one PageRank engine over ``e`` = (src, dst, w), unique pairs
+    with w > 0 → (id, rank) summing to 1.
+
+    The transition table (src, dst, p), p = w / Σw over the source's
+    out-edges, is built once and pinned. Each iteration computes
+    rank' = (1−d)·tp + d·dangling·tp + d·Σ rank·p, where ``dangling`` is
+    the rank mass of nodes without out-edges and ``tp`` the teleport
+    vector: 1/n uniform, or 1/k over the k ``seeds`` present in the
+    graph. The start vector is ``tp``; with ``prior`` it is the prior
+    ranks, new nodes at 1/n, renormalized. ``tol`` stops the iteration
+    once the L1 delta drops below it.
+
+    One size switch, checked BEFORE any collect: a transition table of
+    at most ``driver_max_edges`` rows is collected and iterated by
+    :func:`_power_kernel` (20 Spark jobs on a vocabulary-sized graph is
+    all scheduler overhead); n ≤ 2m, so the edge bound also bounds the
+    driver's node arrays. A larger table runs :func:`_power_loop`. All
+    scratch sits under one ``pr_`` tag, and only the final rank vector
+    survives the call. Path equivalence to 1e-9 is pinned by
+    test_graph_query.py.
+    """
+    import uuid
+
+    from pyspark.sql import Window
+
+    from graphlab_spark.operators.scratch import cleanup_prefix, local_frame, materialize
+
+    spark = e.sparkSession
+    tag = f"pr_{uuid.uuid4().hex[:8]}"  # scratch scoped to this call
+    trans = materialize(
+        e.select(
+            "src", "dst", (F.col("w") / F.sum("w").over(Window.partitionBy("src"))).alias("p")
+        ),
+        f"{tag}_trans",
+    )
+    m = trans.count()
+    if m == 0:
         cleanup_prefix(tag)
-        return edges.sparkSession.createDataFrame([], "id string, rank double")
-    if n <= driver_max_nodes:
-        m = e.count()
-        if m <= driver_max_edges:
-            cleanup_prefix(tag)
-            triples = [(r.src, r.dst, r.w) for r in e.collect()]
-            return e.sparkSession.createDataFrame(
-                _weighted_pagerank_driver(triples, damping, n_iter),
-                "id string, rank double",
-            )
-    out_w = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    dangling_nodes = materialize(
-        nodes.join(out_w.withColumnRenamed("src", "id"), "id", "left_anti"),
-        f"{tag}_dangling",
+        return local_frame(spark, [], "id string, rank double")
+    if m <= driver_max_edges:
+        rows = trans.collect()
+        cleanup_prefix(tag)
+        return _pagerank_on_driver(spark, rows, damping, n_iter, seeds, prior, tol)
+
+    # node pin (id, dang, s): dangling iff never a source; s marks the
+    # teleport targets, so tp = s / Σs
+    ends = trans.select(F.col("src").alias("id"), F.lit(False).alias("dang")).unionByName(
+        trans.select(F.col("dst").alias("id"), F.lit(True).alias("dang"))
     )
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(n_iter):
-        contribs = (
-            e.join(out_w, "src")
-            .join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") * F.col("w") / F.col("ow")).alias("c"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        dangling_mass = F.broadcast(
-            ranks.join(dangling_nodes, "id", "left_semi").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-            )
-        )
-        ranks = materialize(
-            nodes.join(contribs, "id", "left")
-            .crossJoin(dangling_mass)
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("_dangling") / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
+    nodes = ends.groupBy("id").agg(F.min("dang").alias("dang"))
+    if seeds is None:
+        nodes = nodes.withColumn("s", F.lit(1.0))
+    else:
+        seed_df = local_frame(spark, [(v, 1.0) for v in seeds], "id string, s double")
+        nodes = nodes.join(seed_df, "id", "left").fillna(0.0, ["s"])
+    nodes = materialize(nodes, f"{tag}_nodes")
+    k = nodes.agg(F.sum("s")).first()[0]
+    if k == 0:
+        cleanup_prefix(tag)
+        raise ValueError("personalized_pagerank: no seed present in the graph")
+    start = nodes.select("id", "dang", (F.col("s") / k).alias("tp")).withColumn(
+        "rank", F.col("tp")
+    )
+    if prior is not None:
+        seeded = start.join(
+            prior.select("id", F.col("rank").alias("_prior")), "id", "left"
+        ).select("id", "dang", "tp", F.coalesce("_prior", "tp").alias("rank"))
+        total = F.broadcast(seeded.agg(F.sum("rank").alias("_t")))
+        start = materialize(
+            seeded.crossJoin(total).select(
+                "id", "dang", "tp", (F.col("rank") / F.col("_t")).alias("rank")
             ),
-            f"{tag}_iter_{i:04d}",
+            f"{tag}_init",
         )
-        if i > 0:
-            cleanup_prefix(f"{tag}_iter_{i - 1:04d}")
-    cleanup_prefix(f"{tag}_nodes")
-    cleanup_prefix(f"{tag}_dangling")
-    return ranks
+    ranks = _power_loop(trans, start, damping, n_iter, tag, tol, check_every)
+    cleanup_prefix(f"{tag}_trans")
+    if ranks is not start:  # n_iter = 0 returns the start vector itself
+        cleanup_prefix(f"{tag}_nodes")
+        cleanup_prefix(f"{tag}_init")
+    return ranks.select("id", "rank")
 
 
-def _weighted_pagerank_driver(
-    triples: list[tuple[str, str, float]], damping: float, n_iter: int
-) -> list[tuple[str, float]]:
-    """Driver fast path for :func:`weighted_pagerank` — identical
-    formulation, sparse numpy iteration over weighted edges."""
+def _pagerank_on_driver(spark, rows, damping, n_iter, seeds, prior, tol) -> DataFrame:
+    """:func:`_pagerank`'s driver path over the collected transition
+    rows: index arrays over the sorted node ids (deterministic output
+    order), the teleport and start vectors, then :func:`_power_kernel`."""
     import numpy as np
 
-    ids = sorted({s for s, _, _ in triples} | {d for _, d, _ in triples})
+    from graphlab_spark.operators.scratch import local_frame
+
+    ids = sorted({r.src for r in rows} | {r.dst for r in rows})
     pos = {v: i for i, v in enumerate(ids)}
-    n = len(ids)
-    src = np.fromiter((pos[s] for s, _, _ in triples), dtype=np.int64, count=len(triples))
-    dst = np.fromiter((pos[d] for _, d, _ in triples), dtype=np.int64, count=len(triples))
-    w = np.fromiter((x for _, _, x in triples), dtype=np.float64, count=len(triples))
-    out = np.zeros(n)
-    np.add.at(out, src, w)
-    no_out = out == 0
-    r = np.full(n, 1.0 / n)
-    for _ in range(n_iter):
-        contrib = np.bincount(dst, weights=r[src] * w / out[src], minlength=n)
-        dangling = r[no_out].sum()
-        r = (1.0 - damping) / n + damping * dangling / n + damping * contrib
-    return [(v, float(r[pos[v]])) for v in ids]
+    src = np.fromiter((pos[r.src] for r in rows), dtype=np.int64, count=len(rows))
+    dst = np.fromiter((pos[r.dst] for r in rows), dtype=np.int64, count=len(rows))
+    p = np.fromiter((r.p for r in rows), dtype=np.float64, count=len(rows))
+    s = np.ones(len(ids))
+    if seeds is not None:
+        s = np.zeros(len(ids))
+        s[[pos[v] for v in seeds if v in pos]] = 1.0
+        if not s.any():
+            raise ValueError("personalized_pagerank: no seed present in the graph")
+    tp = s / s.sum()
+    init = tp
+    if prior is not None:
+        # the prior may cover a much LARGER previous crawl than the
+        # bounded new graph: semi-join it to the new node set before
+        # the collect, so the driver pull is ≤ n rows
+        init = tp.copy()
+        nodes = local_frame(spark, [(v,) for v in ids], "id string")
+        for r in prior.select("id", "rank").join(nodes, "id", "left_semi").collect():
+            init[pos[r.id]] = r.rank
+        init /= init.sum()
+    ranks, _ = _power_kernel(src, dst, p, tp, init, damping, n_iter, tol)
+    return local_frame(spark, list(zip(ids, ranks.tolist())), "id string, rank double")
+
+
+def _power_kernel(src, dst, p, tp, init, damping, n_iter, tol=None):
+    """The driver power iteration: SPARSE and vectorized over the edge
+    index arrays ``src``/``dst`` with transition probabilities ``p``
+    (one ``np.bincount`` per iteration — O(E), never a dense n×n), from
+    ``init`` with teleport vector ``tp``; the same update as
+    :func:`_power_loop`. With ``tol`` it stops at the first iteration
+    whose L1 delta is below it. → (ranks, iterations run)."""
+    import numpy as np
+
+    n = len(tp)
+    dangling = np.bincount(src, minlength=n) == 0
+    r = init
+    it = 0
+    for it in range(1, n_iter + 1):
+        nxt = (
+            (1.0 - damping) * tp
+            + damping * r[dangling].sum() * tp
+            + damping * np.bincount(dst, weights=r[src] * p, minlength=n)
+        )
+        done = tol is not None and np.abs(nxt - r).sum() < tol
+        r = nxt
+        if done:
+            break
+    return r, it
+
+
+def _power_loop(trans, start, damping, n_iter, tag, tol=None, check_every=1):
+    """The distributed power iteration over the pinned transition table
+    ``trans`` (src, dst, p) from ``start`` (id, dang, tp, rank) → the
+    final rank frame, pinned to scratch.
+
+    Each iteration is one join of the transition table with the rank
+    vector on src (the rank frame is O(nodes) — orders of magnitude
+    smaller than the edge table at web scale; AQE broadcasts it while it
+    fits) + one partial-aggregated shuffle on dst, then the update with
+    the dangling mass entering as a 1-row broadcast. Each iteration is
+    pinned so lineage stays flat, and the previous one is reclaimed.
+    There is no per-iteration driver sync: the only collect is the
+    ``tol``-gated 1-row L1 delta against the last checked vector, every
+    ``check_every`` iterations.
+    """
+    from graphlab_spark.operators.scratch import cleanup_prefix, materialize
+
+    d = F.lit(damping)
+    ranks = checked = start
+    prev = checked_name = None
+    for i in range(1, n_iter + 1):
+        in_mass = (
+            trans.join(ranks.select(F.col("id").alias("src"), "rank"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("rank") * F.col("p")).alias("in_mass"))
+        )
+        dangling = F.broadcast(
+            ranks.filter("dang").agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
+        )
+        name = f"{tag}_it{i:04d}"
+        ranks = materialize(
+            ranks.select("id", "dang", "tp")
+            .join(in_mass, "id", "left")
+            .crossJoin(dangling)
+            .select(
+                "id",
+                "dang",
+                "tp",
+                (
+                    F.lit(1.0 - damping) * F.col("tp")
+                    + d * F.col("_dm") * F.col("tp")
+                    + d * F.coalesce("in_mass", F.lit(0.0))
+                ).alias("rank"),
+            ),
+            name,
+        )
+        if prev != checked_name:  # the previous iteration is dead
+            cleanup_prefix(f"{prev}-")
+        prev = name
+        if tol is not None and i % check_every == 0:
+            delta = (
+                ranks.join(checked.select("id", F.col("rank").alias("_r0")), "id")
+                .agg(F.sum(F.abs(F.col("rank") - F.col("_r0"))))
+                .first()[0]
+            )
+            if checked_name is not None:
+                cleanup_prefix(f"{checked_name}-")
+            checked, checked_name = ranks, name
+            if delta is not None and delta < tol:
+                break
+    if checked_name not in (None, prev):
+        cleanup_prefix(f"{checked_name}-")
+    return ranks
 
 
 def k_core(
@@ -727,146 +825,6 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     )
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: list[str],
-    damping: float = 0.85,
-    n_iter: int = 20,
-    driver_max_nodes: int = 100_000,
-    driver_max_edges: int = 2_000_000,
-) -> DataFrame:
-    """Personalized PageRank from a seed set → (id, rank): the teleport
-    vector is uniform over ``seeds`` instead of all nodes, so rank mass
-    concentrates in the seeds' neighborhood — THE related-entities query
-    a KG serving tier answers ("more like these"). Dangling mass also
-    teleports to the seeds (standard formulation; ranks sum to 1).
-
-    Same engineering as :func:`pagerank`: size-adaptive driver numpy
-    fast path (identical formulation, pinned in tests), distributed
-    loop with scratch-pinned rank vectors, per-iteration dangling mass
-    folded into the rank-update job — zero mid-loop driver syncs.
-    Float sums ⇒ compared with tolerance/rounding, never hash-gated.
-
-    Seeds are DEDUPED up front and the teleport vector is uniform over
-    the seeds PRESENT in the graph (absent seeds are dropped with the
-    mass renormalized over the rest — ranks always sum to 1; all seeds
-    absent raises). Both paths share the exact same seed semantics.
-    """
-    import uuid
-
-    from graphlab_spark.operators.scratch import cleanup_prefix, materialize
-
-    if not seeds:
-        raise ValueError("personalized_pagerank requires a non-empty seed set")
-    seeds = sorted(set(seeds))
-    tag = f"ppr_{uuid.uuid4().hex[:8]}"
-    spark = edges.sparkSession
-    e = edges.select("src", "dst").distinct()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    nodes = materialize(nodes, f"{tag}_nodes")
-    n = nodes.count()
-    if n == 0:
-        cleanup_prefix(tag)
-        return spark.createDataFrame([], "id string, rank double")
-    if n <= driver_max_nodes:
-        m = e.count()
-        if m <= driver_max_edges:
-            cleanup_prefix(tag)
-            pairs = [(r.src, r.dst) for r in e.collect()]
-            return spark.createDataFrame(
-                _ppr_driver(pairs, seeds, damping, n_iter),
-                "id string, rank double",
-            )
-    present = materialize(
-        nodes.join(
-            F.broadcast(spark.createDataFrame([(s,) for s in seeds], "id string")),
-            "id",
-            "left_semi",
-        ),
-        f"{tag}_seeds",
-    )
-    k = present.count()
-    if k == 0:
-        cleanup_prefix(tag)
-        raise ValueError("personalized_pagerank: no seed present in the graph")
-    seed_df = F.broadcast(present.withColumn("tp", F.lit(1.0 / k)))
-    nodes_tp = materialize(
-        nodes.join(seed_df, "id", "left").fillna(0.0, ["tp"]), f"{tag}_tp"
-    )
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    dangling_nodes = materialize(
-        nodes.join(out_deg.withColumnRenamed("src", "id"), "id", "left_anti"),
-        f"{tag}_dangling",
-    )
-    ranks = nodes_tp.select("id", F.col("tp").alias("rank"))
-    for i in range(n_iter):
-        contribs = (
-            e.join(out_deg, "src")
-            .join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") / F.col("od")).alias("c"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        dangling_mass = F.broadcast(
-            ranks.join(dangling_nodes, "id", "left_semi").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-            )
-        )
-        ranks = materialize(
-            nodes_tp.join(contribs, "id", "left")
-            .crossJoin(dangling_mass)
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - damping) * F.col("tp")
-                    + F.lit(damping) * F.col("_dangling") * F.col("tp")
-                    + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-            ),
-            f"{tag}_iter_{i:04d}",
-        )
-        if i > 0:
-            cleanup_prefix(f"{tag}_iter_{i - 1:04d}")
-    cleanup_prefix(f"{tag}_nodes")
-    cleanup_prefix(f"{tag}_seeds")
-    cleanup_prefix(f"{tag}_tp")
-    cleanup_prefix(f"{tag}_dangling")
-    return ranks
-
-
-def _ppr_driver(
-    pairs: list[tuple[str, str]], seeds: list, damping: float, n_iter: int
-) -> list[tuple[str, float]]:
-    """Driver fast path for :func:`personalized_pagerank` — identical
-    formulation (teleport uniform over PRESENT unique seeds), sparse
-    numpy power iteration."""
-    import numpy as np
-
-    ids = sorted({s for s, _ in pairs} | {d for _, d in pairs})
-    pos = {v: i for i, v in enumerate(ids)}
-    n = len(ids)
-    src = np.fromiter((pos[s] for s, _ in pairs), dtype=np.int64, count=len(pairs))
-    dst = np.fromiter((pos[d] for _, d in pairs), dtype=np.int64, count=len(pairs))
-    out = np.bincount(src, minlength=n).astype(np.float64)
-    no_out = out == 0
-    tp = np.zeros(n)
-    present = [v for v in sorted(set(seeds)) if v in pos]
-    if not present:
-        raise ValueError("personalized_pagerank: no seed present in the graph")
-    for v in present:
-        tp[pos[v]] = 1.0 / len(present)
-    r = tp.copy()
-    for _ in range(n_iter):
-        contrib = np.bincount(dst, weights=r[src] / np.where(out > 0, out, 1.0)[src], minlength=n)
-        dangling = r[no_out].sum()
-        r = (1.0 - damping) * tp + damping * dangling * tp + damping * contrib
-    return [(v, float(r[pos[v]])) for v in ids]
-
-
 def match_pattern(
     edges: DataFrame,
     pattern: list[tuple[str, str | None, str]],
@@ -926,179 +884,3 @@ def match_pattern(
                 )
             acc = acc.join(t, shared)
     return acc.select(*order).distinct()
-
-
-def _pagerank_power_warm(
-    pairs: list[tuple[str, str]],
-    init: dict[str, float],
-    damping: float,
-    tol: float,
-    max_iter: int,
-) -> tuple[list[tuple[str, float]], int]:
-    """Driver warm-start power iteration: start from ``init`` ranks
-    (new nodes seeded uniform, then renormalized to sum 1) and iterate
-    until the L1 delta drops below ``tol`` → (ranks, iterations). The
-    per-iteration formulation is IDENTICAL to :func:`_pagerank_driver`,
-    so both converge to the same fixpoint."""
-    import numpy as np
-
-    ids = sorted({s for s, _ in pairs} | {d for _, d in pairs})
-    pos = {v: i for i, v in enumerate(ids)}
-    n = len(ids)
-    src = np.fromiter((pos[s] for s, _ in pairs), dtype=np.int64, count=len(pairs))
-    dst = np.fromiter((pos[d] for _, d in pairs), dtype=np.int64, count=len(pairs))
-    out = np.bincount(src, minlength=n).astype(np.float64)
-    no_out = out == 0
-    r = np.full(n, 1.0 / n)
-    for v, x in init.items():
-        i = pos.get(v)
-        if i is not None:
-            r[i] = x
-    r /= r.sum()
-    it = 0
-    for it in range(1, max_iter + 1):
-        contrib = np.bincount(dst, weights=r[src] / out[src], minlength=n)
-        dangling = r[no_out].sum()
-        nxt = (1.0 - damping) / n + damping * dangling / n + damping * contrib
-        delta = np.abs(nxt - r).sum()
-        r = nxt
-        if delta < tol:
-            break
-    return [(v, float(r[pos[v]])) for v in ids], it
-
-
-def pagerank_incremental(
-    edges: DataFrame,
-    prior_ranks: DataFrame,
-    damping: float = 0.85,
-    tol: float = 1e-10,
-    max_iter: int = 50,
-    check_every: int = 3,
-    driver_max_nodes: int = 100_000,
-    driver_max_edges: int = 2_000_000,
-) -> DataFrame:
-    """Warm-start PageRank for the monthly re-crawl: iterate from the
-    PREVIOUS crawl's ranks instead of uniform, stopping at the L1
-    convergence tolerance — an unchanged graph converges at the first
-    delta check, and after an O(delta) edge change the cold-start
-    transient is skipped (strictly fewer iterations, pinned in
-    tests/test_graph_query.py; how much fewer depends on the graph's
-    mixing rate vs the tolerance — the tail to tol dominates on
-    well-mixed graphs).
-    The fixpoint is start-independent (power iteration on a primitive
-    chain), so warm output ≡ cold output within tolerance — this is an
-    ACCELERATION, never an approximation drift. Completes the
-    incremental family (dedup/semdedup/inverted-index/CC/graph-delta)
-    for the rank column a KG serves.
-
-    Same size-adaptive discipline as :func:`pagerank`: vocabulary-scale
-    graphs run one driver numpy loop (convergence checks free); the
-    distributed path keeps the zero-mid-loop-sync shape except ONE
-    1-row delta aggregate every ``check_every`` iterations (the
-    connected-components check cadence — each check is a job, variant
-    deltas shrink geometrically so few fire). New nodes seed uniform;
-    departed nodes drop; ranks renormalize to sum 1 before iterating.
-    """
-    import uuid
-
-    from graphlab_spark.operators.scratch import cleanup_prefix, materialize
-
-    tag = f"pri_{uuid.uuid4().hex[:8]}"
-    e = edges.select("src", "dst").distinct()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    nodes = materialize(nodes, f"{tag}_nodes")
-    n = nodes.count()
-    if n == 0:
-        cleanup_prefix(tag)
-        return edges.sparkSession.createDataFrame([], "id string, rank double")
-    if n <= driver_max_nodes:
-        m = e.count()
-        if m <= driver_max_edges:
-            pairs = [(r.src, r.dst) for r in e.collect()]
-            # the prior may cover a much LARGER previous crawl than the
-            # (bounded) new graph — semi-join it down to the new node
-            # set before any collect, so the driver pull is ≤ n rows
-            # (the discipline: both bounds checked BEFORE any collect
-            # applies to the prior side too)
-            init = {
-                r.id: r.rank
-                for r in prior_ranks.select("id", "rank")
-                .join(F.broadcast(nodes), "id", "left_semi")
-                .collect()
-            }
-            cleanup_prefix(tag)
-            ranks, _ = _pagerank_power_warm(pairs, init, damping, tol, max_iter)
-            return e.sparkSession.createDataFrame(ranks, "id string, rank double")
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    dangling_nodes = materialize(
-        nodes.join(out_deg.withColumnRenamed("src", "id"), "id", "left_anti"),
-        f"{tag}_dangling",
-    )
-    seeded = nodes.join(prior_ranks.select("id", "rank"), "id", "left").select(
-        "id", F.coalesce("rank", F.lit(1.0 / n)).alias("rank")
-    )
-    total = seeded.agg(F.sum("rank").alias("_t"))
-    ranks = materialize(
-        seeded.crossJoin(F.broadcast(total)).select(
-            "id", (F.col("rank") / F.col("_t")).alias("rank")
-        ),
-        f"{tag}_iter_0000",
-    )
-    last_checked, last_checked_idx = ranks, 0
-    final_idx = 0
-    for i in range(1, max_iter + 1):
-        final_idx = i
-        contribs = (
-            e.join(out_deg, "src")
-            .join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") / F.col("od")).alias("c"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        dangling_mass = F.broadcast(
-            ranks.join(dangling_nodes, "id", "left_semi").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-            )
-        )
-        ranks = materialize(
-            nodes.join(contribs, "id", "left")
-            .crossJoin(dangling_mass)
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("_dangling") / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-            ),
-            f"{tag}_iter_{i:04d}",
-        )
-        # the previous iteration's parquet is dead UNLESS it is the
-        # pinned convergence-check snapshot
-        if i - 1 != last_checked_idx:
-            cleanup_prefix(f"{tag}_iter_{i - 1:04d}")
-        if i % check_every == 0 or i == max_iter:
-            delta = (
-                ranks.alias("a")
-                .join(last_checked.alias("b"), "id")
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            if last_checked_idx != i:  # snapshot superseded either way
-                cleanup_prefix(f"{tag}_iter_{last_checked_idx:04d}")
-            # the delta accumulated over ≤ check_every iterations bounds
-            # every per-iteration delta in the window from above
-            if delta is not None and delta < tol:
-                break
-            last_checked, last_checked_idx = ranks, i
-    cleanup_prefix(f"{tag}_nodes")
-    cleanup_prefix(f"{tag}_dangling")
-    # every surviving intermediate except the returned vector
-    # (range already excludes final_idx = the returned iteration)
-    for j in range(final_idx):
-        cleanup_prefix(f"{tag}_iter_{j:04d}")
-    return ranks

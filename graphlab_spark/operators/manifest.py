@@ -11,8 +11,9 @@ Model: an append-only parquet table. A completed bucket is identified by
 order-independent content fingerprint of the bucket's input keys
 (sum of xxhash64). On restart, a stage recomputes the per-bucket input
 fingerprints, keeps only completed rows whose fingerprint STILL matches,
-and anti-joins those away from the input — work already done on the same
-input is skipped and its output reused; a bucket whose input changed is
+and filters those buckets out of the input with a literal ``IN``-list
+(``plans/pipeline.run_stage``) — work already done on the same input is
+skipped and its output reused; a bucket whose input changed is
 recomputed (rerunning a run_id against different input can never return
 stale output). This is the idempotent mid-run resume the north_star
 requires.
@@ -162,15 +163,6 @@ class Manifest:
             return self._MISSING
         return max(rows, key=lambda r: r["finished_at"])["input_fp"]
 
-    def pending_input(
-        self, data: DataFrame, run_id: str, stage: str, key_col: str = "url"
-    ) -> DataFrame:
-        """Filter ``data`` down to rows whose bucket is not yet completed
-        (bucket-id check only; run_stage adds the fingerprint match)."""
-        done = self.completed_partitions(run_id, stage).select("partition_id")
-        keyed = data.withColumn("partition_id", bucket_of(key_col))
-        return keyed.join(F.broadcast(done), "partition_id", "left_anti").drop("partition_id")
-
     def record_completed(
         self,
         run_id: str,
@@ -207,15 +199,6 @@ class Manifest:
         )
         rows.write.mode("append").parquet(self.path)
         self._snap = None  # appended → snapshot stale
-
-    def stage_stats(self, data: DataFrame, key_col: str = "url") -> DataFrame:
-        """Per-bucket counters for ``record_completed`` (one pass, map-side)."""
-        return (
-            data.withColumn("partition_id", bucket_of(key_col))
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-            .withColumn("rows_in", F.col("rows_out"))
-        )
 
     # ------------------------------------------------- HLL distinct-keys
     # An exact distinct-url counter across run snapshots needs state the

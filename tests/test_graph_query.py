@@ -38,12 +38,12 @@ def test_degrees(spark, edges):
 
 
 def test_pagerank_matches_numpy(spark, edges):
-    """DISTRIBUTED-path PR (driver_max_nodes=0 forces it) == independent
+    """DISTRIBUTED-path PR (driver_max_edges=0 forces it) == independent
     dense power iteration, same formulation (dangling mass uniform,
     damping 0.85, 20 iterations)."""
     got = {
         r.id: r.rank
-        for r in pagerank(edges, 0.85, 20, driver_max_nodes=0).collect()
+        for r in pagerank(edges, 0.85, 20, driver_max_edges=0).collect()
     }
     ids = sorted(got)
     n = len(ids)
@@ -90,41 +90,123 @@ def test_pagerank_edge_bound_forces_distributed(spark, edges):
         assert abs(got[v] - fast[v]) < 1e-9
 
 
+def _pagerank_family(spark, edges):
+    """The four PageRank operators on ``edges`` as ``name → fn(n_iter, **kw)``
+    (the incremental one with its delta check switched off, so it runs
+    exactly ``n_iter`` iterations)."""
+    from graphlab_spark.operators.graph_query import (
+        pagerank_incremental,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    weighted = edges.select("src", "dst").distinct().withColumn("n_docs", F.lit(1))
+    prior = spark.createDataFrame([("a", 0.5), ("c", 0.5)], "id string, rank double")
+    return {
+        "pagerank": lambda n, **kw: pagerank(edges, n_iter=n, **kw),
+        "weighted": lambda n, **kw: weighted_pagerank(weighted, n_iter=n, **kw),
+        "personalized": lambda n, **kw: personalized_pagerank(
+            edges, ["a", "zz"], n_iter=n, **kw
+        ),
+        "incremental": lambda n, **kw: pagerank_incremental(
+            edges, prior, tol=0.0, max_iter=n, check_every=100, **kw
+        ),
+    }
+
+
+FAMILY = ["pagerank", "weighted", "personalized", "incremental"]
+
+
 def test_pagerank_reclaims_iteration_scratch(spark, edges):
-    """The distributed loop must leave at most its final rank vector in
-    scratch — not 20 dead per-iteration parquets."""
+    """The distributed loop of each of the four operators must leave at
+    most its final rank vector in scratch — not 20 dead per-iteration
+    parquets."""
     import glob
 
     from graphlab_spark.operators.scratch import scratch_dir
 
+    for name, run in _pagerank_family(spark, edges).items():
+        before = set(glob.glob(f"{scratch_dir()}/pr_*"))
+        run(5, driver_max_edges=0).count()
+        new = set(glob.glob(f"{scratch_dir()}/pr_*")) - before
+        assert len(new) <= 1, (name, new)  # only the returned final iteration
+
+
+def test_pagerank_incremental_reclaims_checked_snapshots(spark):
+    """With delta checks on, the checked snapshots are reclaimed too."""
+    import glob
+
+    from graphlab_spark.operators.graph_query import pagerank_incremental
+    from graphlab_spark.operators.scratch import scratch_dir
+
+    prior = spark.createDataFrame([("a", 1.0)], "id string, rank double")
     before = set(glob.glob(f"{scratch_dir()}/pr_*"))
-    pagerank(edges, n_iter=5, driver_max_nodes=0).count()
+    pagerank_incremental(
+        _pr_edges(spark), prior, tol=1e-30, max_iter=7, check_every=3, driver_max_edges=0
+    ).count()
     new = set(glob.glob(f"{scratch_dir()}/pr_*")) - before
-    assert len(new) <= 1, new  # only the returned final iteration
+    assert len(new) <= 1, new
+
+
+# Spark jobs at local[8] on the EDGES fixture, counted with
+# test_round2_fixes._jobs_launched: per distributed iteration (the
+# transition table is pinned once per call, outside the loop) and per
+# driver-path call (the incremental one also collects the prior).
+JOBS_PER_ITERATION = 6
+DRIVER_PATH_JOBS = {"pagerank": 6, "weighted": 6, "personalized": 6, "incremental": 8}
+
+
+@pytest.mark.parametrize("name", FAMILY)
+def test_pagerank_jobs_per_distributed_iteration(spark, edges, name):
+    from tests.test_round2_fixes import _jobs_launched
+
+    run = _pagerank_family(spark, edges)[name]
+    five, six = (
+        _jobs_launched(
+            spark, f"pr_iter_{name}_{n}", lambda n=n: run(n, driver_max_edges=0).collect()
+        )
+        for n in (5, 6)
+    )
+    assert six - five == JOBS_PER_ITERATION, (five, six)
+
+
+@pytest.mark.parametrize("name", FAMILY)
+def test_pagerank_driver_path_job_budget(spark, edges, name):
+    from tests.test_round2_fixes import _jobs_launched
+
+    run = _pagerank_family(spark, edges)[name]
+    jobs = _jobs_launched(spark, f"pr_driver_{name}", lambda: run(20).collect())
+    assert jobs == DRIVER_PATH_JOBS[name]
 
 
 def test_pagerank_loop_has_no_driver_sync():
     """r2 verdict: the distributed loop must not collect() per iteration
     (each is a full-job barrier on a real cluster). The dangling mass is
-    a 1-row broadcast frame computed inside the rank-update job."""
+    a 1-row broadcast frame computed inside the rank-update job; the one
+    driver sync allowed in the loop is the ``tol``-gated delta check."""
     import ast
     import inspect
 
     from graphlab_spark.operators import graph_query
 
-    src = inspect.getsource(graph_query.pagerank)
-    tree = ast.parse(src)
-    fn = tree.body[0]
-    loops = [n for n in ast.walk(fn) if isinstance(n, ast.For)]
+    tree = ast.parse(inspect.getsource(graph_query._power_loop))
+    loops = [n for n in ast.walk(tree.body[0]) if isinstance(n, ast.For)]
     assert loops, "expected the iteration loop"
     for loop in loops:
-        calls = [
-            n.func.attr
-            for n in ast.walk(loop)
-            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
-        ]
-        assert "collect" not in calls, "driver sync inside the PageRank loop"
-        assert "count" not in calls, "driver sync inside the PageRank loop"
+        gated = {
+            id(n)
+            for branch in ast.walk(loop)
+            if isinstance(branch, ast.If)
+            and any(isinstance(x, ast.Name) and x.id == "tol" for x in ast.walk(branch.test))
+            for n in ast.walk(branch)
+        }
+        for n in ast.walk(loop):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("collect", "count", "first", "take", "head")
+            ):
+                assert id(n) in gated, f"driver sync inside the PageRank loop: {n.func.attr}"
 
 
 def test_triangle_count_hand_graph(spark):
@@ -420,7 +502,7 @@ def test_ppr_distributed_equals_driver(spark, edges):
     dist = {
         r.id: r.rank
         for r in personalized_pagerank(
-            edges, seeds, driver_max_nodes=0, n_iter=15
+            edges, seeds, driver_max_edges=0, n_iter=15
         ).collect()
     }
     fast = {
@@ -447,7 +529,7 @@ def test_ppr_concentrates_on_seed_neighborhood(spark, edges):
 
 def test_ppr_independent_numpy_check(spark, edges):
     """Distributed PPR == a dense numpy reference written independently
-    of _ppr_driver (matrix form: r = (1-d)p + d(A^T D^-1 r + dangling·p))."""
+    of the driver kernel (matrix form: r = (1-d)p + d(A^T D^-1 r + dangling·p))."""
     import numpy as np
 
     from graphlab_spark.operators.graph_query import personalized_pagerank
@@ -469,7 +551,7 @@ def test_ppr_independent_numpy_check(spark, edges):
         r = 0.15 * p + 0.85 * (M @ share + dangling * p)
     got = {
         x.id: x.rank
-        for x in personalized_pagerank(edges, ["a"], driver_max_nodes=0).collect()
+        for x in personalized_pagerank(edges, ["a"], driver_max_edges=0).collect()
     }
     for v in ids:
         assert abs(got[v] - r[pos[v]]) < 1e-9, v
@@ -496,11 +578,11 @@ def test_ppr_duplicate_and_absent_seeds_normalized(spark, edges):
         r.id: r.rank for r in personalized_pagerank(edges, ["a"], n_iter=15).collect()
     }
     for seeds in (["a", "a", "a"], ["a", "zzz_not_in_graph"]):
-        for dmax in (100_000, 0):  # driver fast path and distributed loop
+        for dmax in (2_000_000, 0):  # driver fast path and distributed loop
             got = {
                 r.id: r.rank
                 for r in personalized_pagerank(
-                    edges, seeds, n_iter=15, driver_max_nodes=dmax
+                    edges, seeds, n_iter=15, driver_max_edges=dmax
                 ).collect()
             }
             assert set(got) == set(base)
@@ -511,7 +593,7 @@ def test_ppr_duplicate_and_absent_seeds_normalized(spark, edges):
         personalized_pagerank(edges, ["zzz_not_in_graph"], n_iter=3)
     with _pytest.raises(ValueError):
         personalized_pagerank(
-            edges, ["zzz_not_in_graph"], n_iter=3, driver_max_nodes=0
+            edges, ["zzz_not_in_graph"], n_iter=3, driver_max_edges=0
         )
 
 
@@ -537,7 +619,7 @@ def test_weighted_pagerank_follows_evidence(spark):
     fast = {r.id: r.rank for r in weighted_pagerank(wedges, n_iter=25).collect()}
     dist = {
         r.id: r.rank
-        for r in weighted_pagerank(wedges, n_iter=25, driver_max_nodes=0).collect()
+        for r in weighted_pagerank(wedges, n_iter=25, driver_max_edges=0).collect()
     }
     assert set(fast) == set(dist) == {"a", "b", "c"}
     for k in fast:
@@ -687,11 +769,23 @@ def test_pagerank_incremental_reaches_cold_fixpoint(spark):
     assert abs(sum(warm.values()) - 1.0) < 1e-9
 
 
+def _warm_power(pairs, prior, tol, max_iter):
+    """The driver kernel on ``pairs`` from ``prior`` (id → rank; absent
+    nodes at 1/n, renormalized) → ({id: rank}, iterations)."""
+    from graphlab_spark.operators.graph_query import _power_kernel
+
+    ids = sorted({v for pair in pairs for v in pair})
+    pos = {v: i for i, v in enumerate(ids)}
+    src = np.array([pos[s] for s, _ in pairs])
+    dst = np.array([pos[d] for _, d in pairs])
+    p = 1.0 / np.bincount(src, minlength=len(ids))[src]
+    tp = np.full(len(ids), 1.0 / len(ids))
+    init = np.array([prior.get(v, 1.0 / len(ids)) for v in ids])
+    ranks, iters = _power_kernel(src, dst, p, tp, init / init.sum(), 0.85, max_iter, tol)
+    return dict(zip(ids, ranks.tolist())), iters
+
+
 def test_pagerank_incremental_saves_iterations(spark):
-    import numpy as np
-
-    from graphlab_spark.operators.graph_query import _pagerank_power_warm
-
     rng = np.random.RandomState(5)
     nodes = [f"n{i}" for i in range(200)]
     pairs = sorted(
@@ -700,20 +794,18 @@ def test_pagerank_incremental_saves_iterations(spark):
             for _ in range(800)
         }
     )
-    fix, cold_iters = _pagerank_power_warm(pairs, {}, 0.85, 1e-12, 500)
+    fix, cold_iters = _warm_power(pairs, {}, 1e-12, 500)
     assert cold_iters > 10
     # unchanged graph: the warm start IS the fixpoint — convergence
     # detected on the first delta check
-    _, same_iters = _pagerank_power_warm(pairs, dict(fix), 0.85, 1e-12, 500)
+    _, same_iters = _warm_power(pairs, fix, 1e-12, 500)
     assert same_iters <= 2
     # perturbed graph: strictly fewer iterations than a cold start (the
     # saving is the cold transient; on well-mixed graphs the tail to
     # tol dominates, so this is a floor, not a 10x claim)
     delta = pairs + [("n0", "n199"), ("n42", "n7")]
-    _, warm_iters = _pagerank_power_warm(
-        delta, dict(fix), 0.85, 1e-12, 500
-    )
-    _, cold2_iters = _pagerank_power_warm(delta, {}, 0.85, 1e-12, 500)
+    _, warm_iters = _warm_power(delta, fix, 1e-12, 500)
+    _, cold2_iters = _warm_power(delta, {}, 1e-12, 500)
     assert warm_iters < cold2_iters
 
 
@@ -733,7 +825,7 @@ def test_pagerank_incremental_distributed_matches_driver(spark):
     dist = {
         r.id: r.rank
         for r in pagerank_incremental(
-            new, prior, tol=1e-10, driver_max_nodes=0, check_every=3
+            new, prior, tol=1e-10, driver_max_edges=0, check_every=3
         ).collect()
     }
     assert set(fast) == set(dist)

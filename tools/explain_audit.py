@@ -248,15 +248,18 @@ def main() -> None:
             "ResolvedHint" not in p and "broadcast" not in plan_of(df).split("== Physical")[0],
         )
 
-    # 10. PageRank iteration: the dangling-mass scalar enters the rank
-    # update as a broadcast 1-row frame (no mid-loop driver collect — the
-    # loop body is also AST-checked in tests/test_graph_query.py)
+    # 10. PageRank iteration: the four PageRank operators share one
+    # distributed loop (graph_query._power_loop) over one pinned
+    # transition table; the dangling-mass scalar enters the rank update
+    # as a broadcast 1-row frame (no mid-loop driver collect — the loop
+    # body is AST-checked and its jobs per iteration pinned in
+    # tests/test_graph_query.py)
     edges_df = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7 + 1) % 40}") for i in range(60)], "src string, dst string"
     )
     from graphlab_spark.operators.graph_query import pagerank
 
-    pr = pagerank(edges_df, n_iter=2, driver_max_nodes=0)  # force distributed path
+    pr = pagerank(edges_df, n_iter=2, driver_max_edges=0)  # force distributed path
     ok_all &= check("pagerank distributed path produces ranks", pr.count() > 0)
 
     # 11. r4 operators
